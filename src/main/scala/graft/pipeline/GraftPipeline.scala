@@ -1,7 +1,13 @@
 package graft.pipeline
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.FutureAction
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.operators.{SampleFilter, SampleMapper, Sampling}
 import graft.sources.{ShardExpand, ShardListing}
@@ -453,20 +459,65 @@ object GraftPipeline {
     * batched local iterator at the engine edge. Collation is a no-op —
     * partitions are already columnar (SURVEY.md §2.4 A3); `partial`
     * mirrors the keep-last-short-batch flag.
+    *
+    * Rows arrive in partition order, the sequence `df.collect()` gives,
+    * from one Spark job per partition. Those jobs run ahead of the
+    * consumer, the dual of the reference's `num_workers` prefetch: the
+    * loader keeps `sc.defaultParallelism` partition jobs in flight, so
+    * it holds at most `defaultParallelism + 1` partitions in memory (the
+    * window plus the one being drained). Opening the loader is one SQL
+    * execution that plans the frame and submits the first window;
+    * `hasNext` waits for the rows of the next batch. If a partition job
+    * fails, `hasNext`/`next()` throw its error, after every batch
+    * completed before it, and the jobs still in flight are cancelled.
+    * An abandoned loader lets its in-flight jobs finish.
     */
-  def loader(df: DataFrame, batchSize: Int, partial: Boolean = true): Iterator[Seq[Row]] = {
-    val it = df.toLocalIterator()
-    new Iterator[Seq[Row]] {
-      private var nextBatch: Seq[Row] = fetch()
-      private def fetch(): Seq[Row] = {
-        val buf = scala.collection.mutable.ArrayBuffer[Row]()
-        while (buf.length < batchSize && it.hasNext) buf += it.next()
-        buf.toSeq
+  def loader(df: DataFrame, batchSize: Int, partial: Boolean = true): Iterator[Seq[Row]] =
+    prefetchedRows(df).grouped(batchSize).withPartial(partial)
+
+  /** `df`'s rows in partition order, fetched by per-partition jobs kept
+    * `sc.defaultParallelism` ahead of the consumer (see [[loader]]).
+    * Every job is submitted from the caller's thread, so job tags,
+    * scheduler pool and other local properties apply as they would to
+    * a job the caller ran itself.
+    */
+  private def prefetchedRows(df: DataFrame): Iterator[Row] = {
+    val sc = df.sparkSession.sparkContext
+    Bridge.withPlannedRows(df, "loader") { (rdd, fromRow) =>
+      val nParts = rdd.getNumPartitions
+      val inFlight = scala.collection.mutable.Queue[FutureAction[Array[InternalRow]]]()
+      var submitted = 0
+      def submitNext(): Unit = if (submitted < nParts) {
+        val out = new Array[Array[InternalRow]](1)
+        // one RDD per job: a failed stage aborts every active job whose
+        // lineage holds the stage's RDD, so jobs sharing `rdd` would fail
+        // the partitions before the broken one along with it
+        val copied = rdd.mapPartitions(_.map(_.copy()))
+        inFlight.enqueue(sc.submitJob(copied, (rows: Iterator[InternalRow]) => rows.toArray,
+          Seq(submitted), (_: Int, part: Array[InternalRow]) => out(0) = part, out(0)))
+        submitted += 1
       }
-      override def hasNext: Boolean =
-        nextBatch.nonEmpty && (partial || nextBatch.length == batchSize)
-      override def next(): Seq[Row] = {
-        val b = nextBatch; nextBatch = fetch(); b
+      (0 until sc.defaultParallelism).foreach(_ => submitNext())
+      new Iterator[Row] {
+        private var current: Iterator[InternalRow] = Iterator.empty
+        private var failure: Throwable = null
+        override def hasNext: Boolean = {
+          while (failure == null && !current.hasNext && inFlight.nonEmpty) {
+            try {
+              current = Await.result(inFlight.dequeue(), Duration.Inf).iterator
+              submitNext()
+            } catch {
+              case e: Throwable =>
+                inFlight.foreach(_.cancel())
+                inFlight.clear()
+                failure = e
+            }
+          }
+          if (failure != null) throw failure
+          current.hasNext
+        }
+        override def next(): Row =
+          if (hasNext) fromRow(current.next()) else Iterator.empty.next()
       }
     }
   }

@@ -1598,7 +1598,6 @@ object SnapshotLog {
         .min(BigInt(Long.MaxValue / 2)).toLong
     val target = df.sparkSession.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val sized = math.max(1L, (bytes + target - 1) / target)
     // partition count straight off the checkpointed plan's LogicalRDD —
     // Dataset.rdd would wrap a row-deserialization RDD in its own SQL
     // execution (a listener-visible no-job exec per pin, and a plan the
@@ -1607,9 +1606,22 @@ object SnapshotLog {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.getNumPartitions
     }.sum
-    val k = math.max(sized, math.min(nParts.toLong,
-      sc.defaultParallelism.toLong)).toInt
+    val k = pinPartitions(bytes, target, nParts, sc.defaultParallelism)
     if (k < nParts) p.coalesce(k) else p
+  }
+
+  /** Partition count for a [[pin]]ned frame of `nParts` partitions
+    * holding about `bytes`: one per `target` bytes, floored at
+    * `min(nParts, parallelism)` and capped at `nParts` (a pin never
+    * grows). The cap comes before the Int conversion: the optimizer's
+    * `Long.MaxValue / 2` size sentinel would otherwise ask for ~7e10
+    * partitions and wrap negative.
+    */
+  private[graft] def pinPartitions(bytes: Long, target: Long, nParts: Int,
+      parallelism: Int): Int = {
+    val sized = math.max(1L, (bytes + target - 1) / target)
+    math.min(nParts.toLong,
+      math.max(sized, math.min(nParts.toLong, parallelism.toLong))).toInt
   }
 
   /** Release the storage blocks behind a [[pin]]ned frame. A pin is

@@ -1037,8 +1037,9 @@ object GraftSql {
   /** Run `body`, converting a folded `raise_error` refusal guard that
     * fired inside one of its Spark jobs (surfacing as a wrapped task
     * failure whose cause chain carries `msg`) back into the
-    * statement-level IllegalArgumentException contract. Any other
-    * failure rethrows untouched.
+    * statement-level IllegalArgumentException contract, with the
+    * original failure as its cause. Any other failure rethrows
+    * untouched.
     */
   private def refusingAs[A](msg: String)(body: => A): A =
     try body
@@ -1053,7 +1054,7 @@ object GraftSql {
         while (t != null && hops < 32) {
           val m = t.getMessage
           if (m != null && (m.contains(msg) || m.contains(marker)))
-            throw new IllegalArgumentException(msg)
+            throw new IllegalArgumentException(msg, e)
           t = t.getCause
           hops += 1
         }

@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Minimal bridge to Spark's package-private Column↔Expression
   * conversion (`org.apache.spark.sql.classic.ExpressionUtils` is
@@ -26,4 +29,26 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema, isStreaming = false)
+
+  /** Open `df` as one SQL execution the way `Dataset.withAction` does
+    * (`SQLExecution.withNewExecutionId`, plan metrics reset) and run
+    * `body` inside it with the planned RDD of internal rows and the
+    * frame's `ExpressionEncoder` row deserializer. Jobs `body` submits
+    * carry the execution's id; jobs submitted after it returns do not,
+    * the same as the per-partition jobs of `Dataset.toLocalIterator`.
+    * The RDD is `QueryExecution.toRdd`, which ships the session's SQL
+    * conf with its tasks outside the execution too.
+    */
+  def withPlannedRows[T](df: DataFrame, name: String)(
+      body: (RDD[InternalRow], InternalRow => Row) => T): T = {
+    val ds = df.asInstanceOf[Dataset[Row]]
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.executedPlan.resetMetrics()
+      val fromRow = ds.exprEnc
+        .resolveAndBind(ds.logicalPlan.output, ds.sparkSession.sessionState.analyzer)
+        .createDeserializer()
+      body(qe.toRdd, fromRow)
+    }
+  }
 }

@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.operators._
 import graft.pipeline._
@@ -304,6 +306,107 @@ class GraftPipelineSpec extends AnyFunSuite {
     assert(full.map(_.size) == Seq(2, 1))
     val strict = GraftPipeline.loader(df, batchSize = 2, partial = false).toSeq
     assert(strict.map(_.size) == Seq(2))
+  }
+
+  // six shards, one partition each, with uneven sample counts: shard 2
+  // holds no sample and the cls filter empties shard 4, so empty and
+  // short partitions sit between fuller ones
+  private val loaderDir = {
+    val counts = Seq(5, 1, 0, 7, 3, 2)
+    Files.createDirectories(base.resolve("loader"))
+    counts.zipWithIndex.foreach { case (n, s) =>
+      writeTar(f"loader/shard-$s%02d.tar", (0 until n).flatMap { i =>
+        Seq(f"l$s%02d_$i%02d.txt" -> s"shard $s sample $i",
+          f"l$s%02d_$i%02d.cls" -> (if (s == 4) "0" else s"${i + 1}"))
+      })
+    }
+    base.resolve("loader").toString
+  }
+
+  private def loaderFrame() = GraftPipeline.create(spark, PipelineConfig(
+    urls = Seq(loaderDir),
+    extensions = Seq("txt", "cls"),
+    postprocessors = Seq(FilterStage(LambdaFilter(Seq("cls"), c => c > 0)))))
+
+  private def assertLoaderMatchesCollect(df: org.apache.spark.sql.DataFrame): Unit = {
+    val expected = df.collect().toSeq
+    for (batchSize <- Seq(1, 3, 8); partial <- Seq(true, false)) {
+      val batches = GraftPipeline.loader(df, batchSize, partial).toSeq
+      val n = if (partial) expected.size else expected.size / batchSize * batchSize
+      val clue = s"batchSize=$batchSize partial=$partial"
+      assert(batches.flatten == expected.take(n), clue)
+      assert(batches.dropRight(1).forall(_.size == batchSize), clue)
+      assert(batches.lastOption.forall(b => b.nonEmpty && (partial || b.size == batchSize)), clue)
+    }
+  }
+
+  test("loader yields df.collect() order across empty and short partitions") {
+    val df = loaderFrame()
+    assert(df.queryExecution.toRdd.getNumPartitions == 6)
+    // 18 samples, shard 4's 3 filtered out; the largest partition (7)
+    // is shorter than the batch of 8
+    assert(df.collect().map(_.getAs[String]("__key__")).toSeq ==
+      Seq("l00_00", "l00_01", "l00_02", "l00_03", "l00_04", "l01_00",
+        "l03_00", "l03_01", "l03_02", "l03_03", "l03_04", "l03_05", "l03_06",
+        "l05_00", "l05_01"))
+    assertLoaderMatchesCollect(df)
+  }
+
+  test("loader on a single-partition frame and on empty frames") {
+    assertLoaderMatchesCollect(loaderFrame().coalesce(1))
+    val noRows = loaderFrame().where(org.apache.spark.sql.functions.lit(false))
+    assert(GraftPipeline.loader(noRows, 3).isEmpty)
+    assert(GraftPipeline.loader(spark.emptyDataFrame, 3).isEmpty)
+  }
+
+  test("loader runs one job per partition") {
+    val sc = spark.sparkContext
+    val tag = "graft-loader-jobs"
+    sc.addJobTag(tag)
+    try GraftPipeline.loader(loaderFrame(), 4).foreach(_ => ())
+    finally sc.removeJobTag(tag)
+    // the status store is fed by the listener bus, asynchronously
+    eventually(timeout(10.seconds)) {
+      assert(sc.statusTracker.getJobIdsForTag(tag).length == 6)
+    }
+  }
+
+  test("a failing partition job surfaces the reader's error and cancels the prefetch") {
+    val dir = base.resolve("loader_bad")
+    Files.createDirectories(dir)
+    (0 until 6).foreach { s =>
+      if (s == 2) Files.write(dir.resolve("shard-02.tar"),
+        ("this is not a tar at all, but long enough to look like one" * 20).getBytes("UTF-8"))
+      else writeTar(f"loader_bad/shard-$s%02d.tar", (0 until 20).map(i =>
+        f"b$s%02d_$i%02d.txt" -> s"shard $s sample $i"))
+    }
+    // shard 3 takes 20 s when left to run: once shard 2 fails, the
+    // loader must cancel it (and the rest of its window) rather than
+    // leave it running after the error reached the caller
+    val slow = org.apache.spark.sql.functions.udf { (k: String) =>
+      if (k.startsWith("b03")) Thread.sleep(1000)
+      true
+    }
+    val df = GraftPipeline.create(spark, PipelineConfig(
+      urls = Seq(dir.toString), extensions = Seq("txt")))
+      .where(slow(org.apache.spark.sql.functions.col("__key__")))
+    val sc = spark.sparkContext
+    val tag = "graft-loader-failure"
+    val seen = scala.collection.mutable.ArrayBuffer[String]()
+    sc.addJobTag(tag)
+    val e = try intercept[Exception](
+      GraftPipeline.loader(df, 1).foreach(b => seen ++= b.map(_.getAs[String]("__key__"))))
+    finally sc.removeJobTag(tag)
+    // every row before the broken partition arrives, in order, first
+    assert(seen.toSeq == (0 until 2).flatMap(s => (0 until 20).map(i => f"b$s%02d_$i%02d")))
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => String.valueOf(x.getMessage) +: msgs(x.getCause))
+    assert(msgs(e).exists(m => m.contains("failed reading") && m.contains("shard-02.tar")),
+      e.toString)
+    eventually(timeout(10.seconds)) {
+      val running = sc.statusTracker.getActiveJobIds().intersect(sc.statusTracker.getJobIdsForTag(tag))
+      assert(running.isEmpty, s"prefetch jobs ${running.toSeq} left running after the loader failed")
+    }
   }
 
   test("JSON config drives the same pipeline as the Scala config") {

@@ -46,6 +46,21 @@ class MergePinSpec extends AnyFunSuite {
   private def graftBlocksBesides(before: Set[Int]): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
 
+  test("pin partition count: size-driven, floored at parallelism, capped at the pin's own count") {
+    val target = 64L << 20
+    // the optimizer's size sentinel (storage info reported 0): ~6.9e10
+    // size-driven partitions must cap at nParts, not wrap through Int
+    assert(snap.pinPartitions(Long.MaxValue / 2, target, 200, 4) == 200)
+    assert(snap.pinPartitions(Long.MaxValue / 2, target, 3, 4) == 3)
+    // 0 bytes: the parallelism floor, itself never above nParts
+    assert(snap.pinPartitions(0L, target, 200, 4) == 4)
+    assert(snap.pinPartitions(0L, target, 2, 4) == 2)
+    // a normal size: one partition per advisory target
+    assert(snap.pinPartitions(1L << 30, target, 200, 4) == 16)
+    assert(snap.pinPartitions((1L << 30) + 1, target, 200, 4) == 17)
+    assert(snap.pinPartitions(1L << 30, target, 10, 4) == 10)
+  }
+
   test("MERGE evaluates its source exactly once, for every clause shape") {
     val rows = 40
     val acc = instrumentedSource("pin_src", rows)

@@ -1502,6 +1502,9 @@ class SqlSurfaceSpec extends AnyFunSuite {
           |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
     }
     assert(e.getMessage.contains("NULL"), e.getMessage)
+    // the refusal keeps the Spark job failure that carried it
+    assert(e.getCause != null, "refusal dropped the original failure")
+    assert(e.getCause.isInstanceOf[org.apache.spark.SparkThrowable], e.getCause.toString)
     // excluding NULL keys on the clause condition makes it executable:
     // the NULL-id row rides through, non-matching non-null keys delete
     GraftSql.dml(spark,
