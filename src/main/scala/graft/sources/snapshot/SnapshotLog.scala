@@ -1549,22 +1549,11 @@ object SnapshotLog {
     */
   private[graft] def pin(df: DataFrame): DataFrame = {
     // A failing eager checkpoint (e.g. a refusal guard folded into the
-    // pinned plan firing mid-materialization) leaves the blocks of its
-    // completed partitions cached with no handle to release them —
-    // snapshot the persistent-RDD set and unpersist whatever the failed
-    // attempt added. Statements run one at a time per session, so the
-    // delta is ours.
-    val scPre = df.sparkSession.sparkContext
-    val preIds = scPre.getPersistentRDDs.keySet
-    val p =
-      try df.localCheckpoint(eager = true)
-      catch {
-        case e: Throwable =>
-          scPre.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!preIds.contains(id)) rdd.unpersist(blocking = false)
-          }
-          throw e
-      }
+    // pinned plan firing mid-materialization) releases the blocks its
+    // completed partitions cached through the one RDD it persisted —
+    // never through the context-global persistent-RDD set, which holds
+    // every other session's pins too.
+    val p = org.apache.spark.sql.graftbridge.Bridge.localCheckpoint(df)
     // Right-size downstream passes over the pin, keeping a parallelism
     // floor. A checkpoint inherits its plan's partition count —
     // spark.sql.shuffle.partitions for a joined plan — so at scale a
@@ -1905,36 +1894,15 @@ object SnapshotLog {
     require(updates.columns.toSet == schema.fieldNames.toSet,
       s"update columns ${updates.columns.toSeq} != table ${schema.fieldNames.toSeq}")
     val aligned = updates.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-
-    // one pass over updates: per-file key-containment flags + row count
-    // (+ the key-uniqueness probe, in the same aggregation — no extra
-    // pass, and only computed when this caller REFUSES duplicates: the
-    // MERGE machinery's row-set variants skip the distinct entirely).
-    // Uniqueness compares against the KEYED row count — a NULL-key row
-    // can never be a duplicate of anything (it matches no target and
-    // simply appends, the standard outcome), so it must not trip the
-    // refusal the way a raw count-vs-countDistinct comparison would.
-    val checks = containmentChecks(m.files, keyCols)
-    val keyed = keyCols.map(col(_).isNotNull).reduce(_ && _)
-    val head = Seq(count(lit(1)).cast("long").as("__n")) ++
-      (if (uniqueKeys) Seq(
-        countDistinct(col(keyCols.head), keyCols.tail.map(col): _*)
-          .cast("long").as("__nk"),
-        count(when(keyed, 1)).cast("long").as("__nkeyed"))
-      else Nil)
-    val base = head.size
-    val probe = aligned.agg(head.head, (head.tail ++ checks): _*).head
-    if (probe.getLong(0) == 0L) return MutationStats(v0, m.files.size, 0, 0)
-    require(!uniqueKeys || probe.getLong(1) == probe.getLong(2),
+    val probe = keyProbe(aligned, m.files, keyCols, dupCheck = uniqueKeys)
+    if (probe.rows == 0L) return MutationStats(v0, m.files.size, 0, 0)
+    require(!probe.dupKeys,
       "duplicate keys in upsert batch — multiple source rows matched " +
         "and would modify the same target row in conflicting ways; " +
         "pre-aggregate the source to one row per key (latest-wins: " +
         "operators.CdcMerge)")
-    val touched = m.files.indices
-      .filter(i => !probe.isNullAt(i + base) && probe.getInt(i + base) == 1)
-      .toSet
-    val (rewrite, kept) = m.files.zipWithIndex.partition(p => touched(p._2))
-
+    val (rewrite, kept) =
+      m.files.zipWithIndex.partition(p => probe.touched(p._2))
     val v = v0 + 1
     val existing = readFiles(spark, table, m, rewrite.map(_._1))
       .join(aligned.select(keyCols.map(col): _*), keyCols, "left_anti")
@@ -1949,6 +1917,119 @@ object SnapshotLog {
       added = newFiles, eqAdded = Nil)
     MutationStats(vPub, kept.size, 0, rewrite.size)
   }
+
+  /** What one pass over a keyed batch says about manifest files: its
+    * row count, whether two KEYED rows share a key (`dupKeys`, only when
+    * asked — it costs a distinct), and the indices of the files whose
+    * [min,max] window holds some key tuple ([[containmentChecks]]).
+    */
+  private final case class KeyProbe(rows: Long, dupKeys: Boolean,
+      touched: Set[Int])
+
+  /** The candidacy probe shared by the keyed mutations: ONE aggregation
+    * over `batch` — per-file key-containment flags and the row count,
+    * plus, with `dupCheck`, distinct keys against KEYED rows. A NULL-key
+    * row can never be a duplicate of anything (it matches no target and
+    * simply appends, the standard outcome), so it must not trip the
+    * check the way a raw count-vs-countDistinct comparison would.
+    */
+  private def keyProbe(batch: DataFrame, files: Seq[FileEntry],
+      keyCols: Seq[String], dupCheck: Boolean): KeyProbe = {
+    val keyed = keyCols.map(col(_).isNotNull).reduce(_ && _)
+    val head = Seq(count(lit(1)).cast("long").as("__n")) ++
+      (if (dupCheck) Seq(
+        countDistinct(col(keyCols.head), keyCols.tail.map(col): _*)
+          .cast("long").as("__nk"),
+        count(when(keyed, 1)).cast("long").as("__nkeyed"))
+      else Nil)
+    val r = batch.agg(head.head,
+      (head.tail ++ containmentChecks(files, keyCols)): _*).head
+    val base = head.size
+    KeyProbe(r.getLong(0), dupCheck && r.getLong(1) != r.getLong(2),
+      files.indices.filter(i =>
+        !r.isNullAt(i + base) && r.getInt(i + base) == 1).toSet)
+  }
+
+  /** Name of the boolean column a [[mergeByKeys]] rewrite marks the rows
+    * the statement changes with (matched or inserted, not merely kept).
+    */
+  private[graft] val MergeChangedCol = "__graft_changed"
+
+  /** Copy-on-write MERGE by key in two Spark executions: [[keyProbe]]
+    * over `source` against one manifest, then ONE write of
+    * `rewrite(target, guardDups)` through [[shapeRewrite]] →
+    * [[writeData]] → [[publishMutation]] — the op name, stats columns and
+    * OCC of [[upsert]]. `target` holds the live rows of exactly the files
+    * the probe flagged (an empty frame when none); `guardDups` says the
+    * probe saw two source rows share a key while some file could hold
+    * it, so the caller must fold its ambiguity refusal into the rewrite.
+    * `rewrite` returns the table's columns plus [[MergeChangedCol]]; a
+    * rewrite that changes no row publishes nothing, like an upsert of
+    * an empty batch. `mayInsert` = false skips the write when no file is
+    * a candidate. The caller guarantees `source` yields the same rows on
+    * both passes (a driver-local plan or a pin — see [[stableSource]]).
+    */
+  private[graft] def mergeByKeys(source: DataFrame, table: String,
+      keyCols: Seq[String], statsCols: Seq[String], mayInsert: Boolean)(
+      rewrite: (DataFrame, Boolean) => DataFrame): MutationStats = {
+    require(keyCols.nonEmpty && keyCols.distinct == keyCols,
+      s"key columns must be non-empty and distinct, got $keyCols")
+    val spark = source.sparkSession
+    val v0 = latestVersion(spark, table).getOrElse(
+      throw new IllegalArgumentException(s"no committed version in $table"))
+    val m = manifest(spark, table, v0)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
+    val probe = keyProbe(source, m.files, keyCols, dupCheck = true)
+    val (touched, kept) =
+      m.files.zipWithIndex.partition(p => probe.touched(p._2))
+    if (probe.rows == 0L || (touched.isEmpty && !mayInsert))
+      return MutationStats(v0, m.files.size, 0, 0)
+    val target =
+      if (touched.isEmpty) spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      else readFiles(spark, table, m, touched.map(_._1))
+    val changed = org.apache.spark.sql.Observation()
+    val out = rewrite(target, probe.dupKeys && touched.nonEmpty)
+      .observe(changed, count(when(col(MergeChangedCol), 1)).as("n"))
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    val newFiles = writeData(shapeRewrite(out, m.layout), table, v0 + 1,
+      (statsCols ++ keyCols).distinct, physical = m.physical)
+    if (changed.get("n") == 0L) {
+      // nothing matched and nothing inserted: the files just written are
+      // an unreferenced attempt, like a lost commit race's
+      val fs = fsOf(spark, new Path(table))
+      newFiles.map(f => resolveRel(new Path(table), f.path).getParent)
+        .distinct.foreach(d => fs.delete(d, true))
+      return MutationStats(v0, m.files.size, 0, 0)
+    }
+    val v = publishMutation(spark, table, m, "upsert",
+      touched = touched.map(_._1), replacement = Nil, added = newFiles,
+      eqAdded = Nil)
+    MutationStats(v, kept.size, 0, touched.size)
+  }
+
+  /** True when evaluating `df` twice yields the same rows without a pin:
+    * a deterministic plan whose every leaf is driver-held data
+    * (`LocalRelation`) or an already-pinned `LogicalRDD`.
+    */
+  private[graft] def stableSource(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.analyzed
+    plan.deterministic && plan.collectLeaves().forall {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        true
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+      case _ => false
+    }
+  }
+
+  /** True when every leaf of `df`'s plan is driver-held data
+    * (`LocalRelation`) — rows the driver already has, small by
+    * construction.
+    */
+  private[graft] def driverLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
 
   /** MERGE under a residual ON condition (`ON t.k = s.k AND t.ds >= x`
     * — the partition-bounding idiom): `updates` carries the full

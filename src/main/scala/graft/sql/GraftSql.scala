@@ -126,8 +126,8 @@ object GraftSql {
       merge: String = "cow"): Unit = {
     require(merge == "cow" || merge == "mor",
       s"merge strategy must be cow|mor, got '$merge'")
-    graft.sources.snapshot.SnapshotLog.read(spark, table, version)
-      .createOrReplaceTempView(name)
+    org.apache.spark.sql.graftbridge.Bridge.replaceTempView(
+      graft.sources.snapshot.SnapshotLog.read(spark, table, version), name)
     // a version-pinned view is a reproducibility pin: DML refuses it
     snapshotReg.put((spark, name.toLowerCase),
       SnapshotReg(table, statsCols, pinned = version.isDefined,
@@ -1017,7 +1017,7 @@ object GraftSql {
     * text, same exception class callers always saw) at the statement
     * level.
     */
-  private val AmbiguousMergeMsg =
+  private[graft] val AmbiguousMergeMsg =
     "MERGE: multiple source rows matched and attempted to " +
       "modify the same target row — deduplicate the source " +
       "on the merge key (or disambiguate with clause " +
@@ -1034,32 +1034,229 @@ object GraftSql {
   private def pinRefusing(df: DataFrame, msg: String): DataFrame =
     refusingAs(msg)(graft.sources.snapshot.SnapshotLog.pin(df))
 
-  /** Run `body`, converting a folded `raise_error` refusal guard that
-    * fired inside one of its Spark jobs (surfacing as a wrapped task
-    * failure whose cause chain carries `msg`) back into the
+  /** Run `body`, converting a folded `raise_error(msg)` refusal guard
+    * that fired inside one of its Spark jobs back into the
     * statement-level IllegalArgumentException contract, with the
-    * original failure as its cause. Any other failure rethrows
+    * original failure as its cause. The guard is recognized by what
+    * `raise_error` throws — a SparkThrowable of condition
+    * USER_RAISED_EXCEPTION carrying exactly `msg` — anywhere on the
+    * cause chain; any other failure, whatever its text, rethrows
     * untouched.
     */
-  private def refusingAs[A](msg: String)(body: => A): A =
+  private[graft] def refusingAs[A](msg: String)(body: => A): A =
     try body
     catch {
-      case e: Throwable =>
-        // detect on an ASCII prefix too: some log/exception transports
-        // re-encode the message's non-ASCII dash, and a refusal that
-        // stops matching would surface as a raw job failure
-        val marker = msg.take(40)
-        var t: Throwable = e
-        var hops = 0
-        while (t != null && hops < 32) {
-          val m = t.getMessage
-          if (m != null && (m.contains(msg) || m.contains(marker)))
-            throw new IllegalArgumentException(msg, e)
-          t = t.getCause
-          hops += 1
-        }
-        throw e
+      case e: Throwable if Iterator.iterate(e)(_.getCause)
+          .takeWhile(_ != null).take(32).exists {
+            case st: org.apache.spark.SparkThrowable =>
+              st.getCondition == "USER_RAISED_EXCEPTION" &&
+                st.getMessageParameters.get("errorMessage") == msg
+            case _ => false
+          } =>
+        throw new IllegalArgumentException(msg, e)
     }
+
+  /** The table's schema at its head version. */
+  private def tableSchema(spark: SparkSession,
+      t: String): org.apache.spark.sql.types.StructType = {
+    val snap = graft.sources.snapshot.SnapshotLog
+    org.apache.spark.sql.types.StructType.fromDDL(
+      snap.manifest(spark, t, snap.latestVersion(spark, t).get).schemaDdl)
+  }
+
+  /** Star bodies project the SOURCE's column for every table field —
+    * refuse a source that cannot satisfy that before Catalyst produces
+    * an unresolved-column error. The UNCONDITIONAL star form keeps its
+    * stricter contract: an EXTRA source column refuses too (the table's
+    * schema is the contract — no silent drop; WITH SCHEMA EVOLUTION is
+    * the opt-in), while multi-clause statements may carry extra source
+    * columns for their conditions and bodies.
+    */
+  private def requireStarSource(
+      schema: org.apache.spark.sql.types.StructType, srcCols: Seq[String],
+      matchedClauses: List[(Option[String], Option[String])],
+      insClauses: List[(Option[String], Option[(String, String)])],
+      unconditionalStar: Boolean): Unit =
+    if (matchedClauses.exists(_._2.contains("*")) ||
+        insClauses.exists(_._2.isEmpty)) {
+      val missing = schema.fieldNames.filterNot(f =>
+        srcCols.exists(_.equalsIgnoreCase(f)))
+      require(missing.isEmpty,
+        "UPDATE SET * / INSERT * needs the source to carry " +
+          s"every table column; missing ${missing.toSeq} " +
+          s"(source has $srcCols)")
+      if (unconditionalStar)
+        require(srcCols.map(_.toLowerCase).toSet ==
+            schema.fieldNames.map(_.toLowerCase).toSet,
+          s"update columns $srcCols != table " +
+            s"${schema.fieldNames.toSeq} — extra source columns " +
+            "need MERGE WITH SCHEMA EVOLUTION (no silent drop)")
+    }
+
+  /** An UPDATE SET body may assign table columns only, never a key. */
+  private def requireAssignable(assigns: Map[String, Column],
+      schema: org.apache.spark.sql.types.StructType,
+      tKeys: Seq[String]): Unit = {
+    assigns.keys.foreach(a =>
+      require(schema.fieldNames.contains(a),
+        s"UPDATE SET target '$a' not in table schema " +
+          s"${schema.fieldNames.toSeq}"))
+    require(!assigns.keys.exists(a => tKeys.exists(_.equalsIgnoreCase(a))),
+      s"UPDATE SET may not reassign a MERGE key ($tKeys)")
+  }
+
+  /** Index of the first clause whose condition holds — a when-chain in
+    * statement order; null = no clause (ride).
+    */
+  private def clauseIdx(conds: List[Option[String]]): Column =
+    conds.zipWithIndex.foldLeft(Option.empty[Column]) {
+      case (acc, (cond, i)) =>
+        val ci = cond.map(e => org.apache.spark.sql.functions.expr(e))
+          .getOrElse(org.apache.spark.sql.functions.lit(true))
+        Some(acc match {
+          case None => org.apache.spark.sql.functions.when(ci, i)
+          case Some(w) => w.when(ci, i)
+        })
+    }.get
+
+  /** Per-field value of clause i, as a Column — parsed and validated
+    * ONCE per clause, then folded into a when-chain so EVERY clause
+    * rides ONE projection over ONE scan (a per-clause frame union would
+    * re-evaluate the pruned read once per clause).
+    */
+  private def whenChain(clause: Column, idx: Seq[Int],
+      value: Int => Column): Column =
+    idx.foldLeft(Option.empty[Column]) { case (acc, i) =>
+      Some(acc match {
+        case None => org.apache.spark.sql.functions
+          .when(clause === i, value(i))
+        case Some(w) => w.when(clause === i, value(i))
+      })
+    }.get
+
+  /** The explicit `INSERT (cols) VALUES (exprs)` bodies by clause index,
+    * parsed and validated upfront (`INSERT *` clauses have none).
+    */
+  private def insertBodies(
+      insClauses: List[(Option[String], Option[(String, String)])],
+      schema: org.apache.spark.sql.types.StructType,
+      tKeys: Seq[String]): Map[Int, Map[String, Column]] =
+    insClauses.zipWithIndex.collect {
+      case ((_, Some((colsS, valsS))), i) =>
+        val cols = colsS.split(",").map(_.trim).toSeq
+        val exprs = splitTopLevelCommas(valsS)
+          .map(e => org.apache.spark.sql.functions.expr(e.trim))
+        require(cols.nonEmpty && cols.length == exprs.length,
+          s"INSERT column list (${cols.size}) and VALUES " +
+            s"(${exprs.size}) must align")
+        cols.foreach(a =>
+          require(schema.fieldNames.contains(a),
+            s"INSERT column '$a' not in table schema " +
+              s"${schema.fieldNames.toSeq}"))
+        tKeys.foreach(k =>
+          require(cols.exists(_.equalsIgnoreCase(k)),
+            s"INSERT column list must include the MERGE key '$k'"))
+        schema.fields.foreach(f =>
+          if (!cols.contains(f.name))
+            require(f.nullable,
+              s"INSERT omits non-nullable column '${f.name}'"))
+        i -> cols.zip(exprs).toMap
+    }.toMap
+
+  /** Field `f` of the row that insert clause `clause` (an index from
+    * [[clauseIdx]] over `nClauses` clauses) produces, read off a frame
+    * whose columns are the source's: `INSERT *` takes the source column
+    * of the same name, an explicit list its expression or NULL.
+    */
+  private def insertValue(f: org.apache.spark.sql.types.StructField,
+      clause: Column, nClauses: Int,
+      insByCol: Map[Int, Map[String, Column]]): Column =
+    whenChain(clause, 0 until nClauses, i => insByCol.get(i) match {
+      case None => org.apache.spark.sql.functions.col(f.name)
+      case Some(byCol) => byCol.get(f.name).map(_.cast(f.dataType))
+        .getOrElse(org.apache.spark.sql.functions.lit(null).cast(f.dataType))
+    })
+
+  /** The copy-on-write MERGE whose one matched clause is unconditional
+    * (`WHEN MATCHED THEN UPDATE SET *|<assignments>`, any `WHEN NOT
+    * MATCHED [AND cond] THEN INSERT` clauses; no residual ON, BY SOURCE
+    * or CDC shape) in two Spark executions through
+    * [[graft.sources.snapshot.SnapshotLog.mergeByKeys]]: the source keys
+    * probe one manifest, then exactly the candidate files rewrite as a
+    * full outer join of their live rows with the source on the merge
+    * keys. A row with both sides takes the clause's values, a
+    * target-only row is kept, a source-only row takes the insert
+    * when-chain or drops. A source row that matches any target row
+    * matches inside a candidate file (its key lies in that file's
+    * [min,max]), so source-only here means NOT MATCHED for the whole
+    * table. Duplicate-key target rows each take their own update; when
+    * the probe saw a duplicated source key, a per-key source count rides
+    * the join and a matched row whose key has several source rows
+    * raises the "multiple source rows matched" refusal inside the write,
+    * before anything publishes — a duplicated key that matches nothing
+    * inserts every row.
+    */
+  private def mergeOneRewrite(t: String, stats: Seq[String],
+      tKeys: Seq[String], tgtAlias: String, src: String, srcDf: DataFrame,
+      schema: org.apache.spark.sql.types.StructType, setBody: String,
+      insClauses: List[(Option[String], Option[(String, String)])]): Long = {
+    import org.apache.spark.sql.functions.{col => c, count, lit => l,
+      raise_error, when}
+    val matchedValue: org.apache.spark.sql.types.StructField => Column =
+      if (setBody == "*") f => c(s"$src.${f.name}")
+      else {
+        val assigns = parseAssignments(setBody, Set(tgtAlias))
+        requireAssignable(assigns, schema, tKeys)
+        f => assigns.getOrElse(f.name, c(s"$tgtAlias.${f.name}"))
+      }
+    val insByCol = insertBodies(insClauses, schema, tKeys)
+    val (inT, inS, nSrc, insCol) =
+      ("__graft_in_t", "__graft_in_s", "__graft_nsrc", "__graft_ins")
+    val fields = schema.fields.toIndexedSeq
+    graft.sources.snapshot.SnapshotLog.mergeByKeys(srcDf, t, tKeys, stats,
+        mayInsert = insClauses.nonEmpty) { (target, guardDups) =>
+      val source =
+        if (!guardDups) srcDf
+        else srcDf.withColumn(nSrc, count(l(1)).over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(tKeys.map(c): _*)))
+      val both = c(inT).isNotNull && c(inS).isNotNull
+      val joined = target.withColumn(inT, l(true)).as(tgtAlias)
+        .join(source.withColumn(inS, l(true)).as(src),
+          tKeys.map(k => c(s"$tgtAlias.$k") === c(s"$src.$k")).reduce(_ && _),
+          "full_outer")
+      // target and matched values go under internal names, the source
+      // columns under their own, and the frame takes the source alias:
+      // the insert clauses then resolve against the source alone, as a
+      // NOT MATCHED row has no target side
+      val staged = joined.select((fields.indices.map(i =>
+          c(s"$tgtAlias.${fields(i).name}").as(s"__graft_t$i")) ++
+        fields.indices.map { i =>
+          val v = matchedValue(fields(i))
+          val guarded =
+            if (guardDups && i == 0)
+              when(c(nSrc) > 1, raise_error(l(AmbiguousMergeMsg))).otherwise(v)
+            else v
+          when(both, guarded).as(s"__graft_m$i")
+        } ++ srcDf.columns.map(cn => c(s"$src.$cn").as(cn)) :+
+        c(inT) :+ c(inS)): _*).as(src)
+      val kept =
+        if (insClauses.isEmpty) staged.where(c(inT).isNotNull)
+        else staged
+          .withColumn(insCol,
+            when(c(inT).isNull, clauseIdx(insClauses.map(_._1))))
+          .where(c(inT).isNotNull || c(insCol).isNotNull)
+      kept.select(fields.indices.map { i =>
+        val f = fields(i)
+        val matchedOrKept = when(both, c(s"__graft_m$i").cast(f.dataType))
+          .when(c(inT).isNotNull, c(s"__graft_t$i"))
+        (if (insClauses.isEmpty) matchedOrKept
+         else matchedOrKept.otherwise(insertValue(f, c(insCol),
+           insClauses.size, insByCol).cast(f.dataType))).as(f.name)
+      } :+ c(inS).isNotNull.as(
+        graft.sources.snapshot.SnapshotLog.MergeChangedCol): _*)
+    }.version
+  }
 
   /** The MERGE execution shared by the bare-view and subquery source
     * forms — `tgtAlias` / `src` are the TARGET and SOURCE aliases
@@ -1068,7 +1265,12 @@ object GraftSql {
     * source frame. See [[dml]] for the full clause grammar and
     * semantics.
     *
-    * Execution discipline: the source frame is PINNED (materialized
+    * Execution discipline: the unconditional-update copy-on-write shape
+    * runs as one candidacy probe and one rewrite write
+    * ([[mergeOneRewrite]]) and reads its source once per pass; its
+    * source is pinned only when it could diverge between the two — a
+    * deterministic plan over driver-held rows or already-pinned blocks
+    * is read as it is. Every other shape PINS its source (materialized
     * exactly once — [[graft.sources.snapshot.SnapshotLog.pin]]) before
     * anything probes it, so a non-deterministic source cannot diverge
     * between the candidacy probe and the rewrite, and the many
@@ -1403,8 +1605,25 @@ object GraftSql {
               org.apache.spark.sql.functions.col(cn)).toIndexedSeq: _*)
               .as(src)
           }
-        val srcDf = snap.pin(srcForPin)
-        val pins = scala.collection.mutable.ArrayBuffer[DataFrame](srcDf)
+        // the unconditional-update copy-on-write shape compiles to one
+        // probe and one write ([[mergeOneRewrite]]), and reads its
+        // source once per pass: a driver-local or already-pinned
+        // deterministic source yields the same rows on both, so only
+        // any other source pays the pin
+        val oneRewrite = cdcOp.isEmpty && bySrcClauses.isEmpty &&
+          residualRanges.isEmpty && !anySrcCond &&
+          (matchedClauses match {
+            case List((None, Some(_))) => true
+            case _ => false
+          }) && !snapshotOf(spark, name).morMerge
+        val pins = scala.collection.mutable.ArrayBuffer[DataFrame]()
+        val srcDf =
+          if (oneRewrite && snap.stableSource(srcForPin)) srcForPin
+          else {
+            val p = snap.pin(srcForPin)
+            pins += p
+            p
+          }
         try {
         // the conditional-family ambiguity guard defers to the first
         // action over the staged row set (inside the mutation
@@ -1413,7 +1632,16 @@ object GraftSql {
           case Some(opc) if bySrcClauses.isEmpty && residualRanges.isEmpty &&
               !anySrcCond =>
             snap.applyChanges(srcDf, t, tKeys, opc, stats, -1L).version
+          case _ if oneRewrite =>
+            val schema = tableSchema(spark, t)
+            requireStarSource(schema, srcDf.columns.toSeq, matchedClauses,
+              insClauses, unconditionalStar)
+            mergeOneRewrite(t, stats, tKeys, tgtAlias, src, srcDf, schema,
+              matchedClauses.head._2.get, insClauses)
           case _ =>
+            val schema = tableSchema(spark, t)
+            requireStarSource(schema, srcDf.columns.toSeq, matchedClauses,
+              insClauses, unconditionalStar)
             // Explicit bodies, per-clause conditions, and ORDERED
             // multi-clause families: resolve every matched pair to the
             // FIRST clause whose condition holds (a when-chain in
@@ -1427,33 +1655,7 @@ object GraftSql {
             // deletes only when every one of its rows resolved to
             // DELETE — the per-row Delta semantics expressed through
             // keyed replace machinery.
-            val schema = org.apache.spark.sql.types.StructType.fromDDL(
-              snap.manifest(spark, t,
-                snap.latestVersion(spark, t).get).schemaDdl)
             import org.apache.spark.sql.functions.{col => c, lit => l}
-            // star bodies project the SOURCE's column for every table
-            // field — refuse a source that cannot satisfy that before
-            // Catalyst produces an unresolved-column error. The
-            // UNCONDITIONAL star form keeps its stricter contract: an
-            // EXTRA source column refuses too (the table's schema is
-            // the contract — no silent drop; WITH SCHEMA EVOLUTION is
-            // the opt-in), while multi-clause statements may carry
-            // extra source columns for their conditions and bodies.
-            if (matchedClauses.exists(_._2.contains("*")) ||
-                insClauses.exists(_._2.isEmpty)) {
-              val missing = schema.fieldNames.filterNot(f =>
-                srcDf.columns.exists(_.equalsIgnoreCase(f)))
-              require(missing.isEmpty,
-                "UPDATE SET * / INSERT * needs the source to carry " +
-                  s"every table column; missing ${missing.toSeq} " +
-                  s"(source has ${srcDf.columns.toSeq})")
-              if (unconditionalStar)
-                require(srcDf.columns.map(_.toLowerCase).toSet ==
-                    schema.fieldNames.map(_.toLowerCase).toSet,
-                  s"update columns ${srcDf.columns.toSeq} != table " +
-                    s"${schema.fieldNames.toSeq} — extra source columns " +
-                    "need MERGE WITH SCHEMA EVOLUTION (no silent drop)")
-            }
             // source-side restriction: rows failing it can match
             // nothing (they are still NOT MATCHED and insert);
             // null-safe so a NULL value is non-matchable, like in a
@@ -1479,51 +1681,14 @@ object GraftSql {
               else matchedTgt0.where(snap.rangeExpr(residualRanges))
             def onCond = tKeys.map(k =>
               c(s"$tgtAlias.$k") === c(s"$src.$k")).reduce(_ && _)
-            def validateAssigns(assigns: Map[String, Column]): Unit = {
-              assigns.keys.foreach(a =>
-                require(schema.fieldNames.contains(a),
-                  s"UPDATE SET target '$a' not in table schema " +
-                    s"${schema.fieldNames.toSeq}"))
-              require(!assigns.keys.exists(a =>
-                  tKeys.exists(_.equalsIgnoreCase(a))),
-                s"UPDATE SET may not reassign a MERGE key ($tKeys)")
-            }
             val clauseCol = "__graft_clause"
             val srcIdCol = "__graft_src_id"
             val tgtIdCol = "__graft_tgt_id"
-            // index of the first clause whose condition holds — a
-            // when-chain in statement order; null = no clause (ride)
-            def clauseIdx(conds: List[Option[String]]): Column =
-              conds.zipWithIndex.foldLeft(Option.empty[Column]) {
-                case (acc, (cond, i)) =>
-                  val ci = cond
-                    .map(e => org.apache.spark.sql.functions.expr(e))
-                    .getOrElse(l(true))
-                  Some(acc match {
-                    case None =>
-                      org.apache.spark.sql.functions.when(ci, l(i))
-                    case Some(w) => w.when(ci, l(i))
-                  })
-              }.get
-            // per-field value of clause i, as a Column — parsed and
-            // validated ONCE per clause, then folded into a when-chain
-            // so EVERY update clause rides ONE projection over ONE
-            // scan (a per-clause frame union would re-evaluate the
-            // pruned semi-join read once per clause)
-            def whenChain(clause: Column, idx: Seq[Int],
-                value: Int => Column): Column =
-              idx.foldLeft(Option.empty[Column]) { case (acc, i) =>
-                Some(acc match {
-                  case None => org.apache.spark.sql.functions
-                    .when(clause === i, value(i))
-                  case Some(w) => w.when(clause === i, value(i))
-                })
-              }.get
             val updAssigns: Map[Int, Map[String, Column]] =
               matchedClauses.zipWithIndex.collect {
                 case ((_, Some(b)), i) if b != "*" =>
                   val a = parseAssignments(b, Set(tgtAlias))
-                  validateAssigns(a); i -> a
+                  requireAssignable(a, schema, tKeys); i -> a
               }.toMap
             val updIdx = matchedClauses.zipWithIndex
               .collect { case ((_, Some(_)), i) => i }
@@ -1556,8 +1721,11 @@ object GraftSql {
             // per-target-row collapse window they already pay (the
             // same Window.partitionBy(tgtId) exchange computes two
             // more aggregates and a raise_error guard — no extra
-            // action, no extra shuffle); unconditional families keep
-            // the separate one-aggregation probe, because folding
+            // action, no extra shuffle); the unconditional families
+            // left here (a lone DELETE, or an update under residual ON,
+            // BY SOURCE or MOR — the plain copy-on-write update takes
+            // [[mergeOneRewrite]]) keep the separate one-aggregation
+            // probe, because folding
             // would add a window pass to a branch whose plan contract
             // is "no Window" (a window shuffles full pair rows where
             // the probe shuffles two id columns). Either way the
@@ -1705,31 +1873,7 @@ object GraftSql {
             val inserted: Option[DataFrame] =
               if (insClauses.isEmpty) None
               else {
-                // explicit column lists parse and validate upfront
-                val insByCol: Map[Int, Map[String, Column]] =
-                  insClauses.zipWithIndex.collect {
-                    case ((_, Some((colsS, valsS))), i) =>
-                      val cols = colsS.split(",").map(_.trim).toSeq
-                      val exprs = splitTopLevelCommas(valsS)
-                        .map(e => org.apache.spark.sql.functions.expr(e.trim))
-                      require(cols.nonEmpty && cols.length == exprs.length,
-                        s"INSERT column list (${cols.size}) and VALUES " +
-                          s"(${exprs.size}) must align")
-                      cols.foreach(a =>
-                        require(schema.fieldNames.contains(a),
-                          s"INSERT column '$a' not in table schema " +
-                            s"${schema.fieldNames.toSeq}"))
-                      tKeys.foreach(k =>
-                        require(cols.exists(_.equalsIgnoreCase(k)),
-                          s"INSERT column list must include the MERGE " +
-                            s"key '$k'"))
-                      schema.fields.foreach(f =>
-                        if (!cols.contains(f.name))
-                          require(f.nullable,
-                            s"INSERT omits non-nullable column " +
-                              s"'${f.name}'"))
-                      i -> cols.zip(exprs).toMap
-                  }.toMap
+                val insByCol = insertBodies(insClauses, schema, tKeys)
                 // a source row is NOT MATCHED iff no target row
                 // satisfies the full ON with it: matchable rows
                 // anti-join the matched keys; rows failing a
@@ -1744,17 +1888,11 @@ object GraftSql {
                     srcDf.where(!srcResidualHolds))
                 val anti = antiAll.as(src)
                   .withColumn(clauseCol, clauseIdx(insClauses.map(_._1)))
-                val allIdx = insClauses.indices
                 Some(anti.where(c(clauseCol).isNotNull)
-                  .select(schema.fields.map { f =>
-                    whenChain(c(clauseCol), allIdx,
-                      i => insByCol.get(i) match {
-                        case None => c(f.name) // INSERT *
-                        case Some(byCol) => byCol.get(f.name)
-                          .map(_.cast(f.dataType))
-                          .getOrElse(l(null).cast(f.dataType))
-                      }).as(f.name)
-                  }.toIndexedSeq: _*))
+                  .select(schema.fields.map(f =>
+                    insertValue(f, c(clauseCol), insClauses.size, insByCol)
+                      .as(f.name))
+                    .toIndexedSeq: _*))
               }
             // WHEN NOT MATCHED BY SOURCE: target rows with no
             // (matchable) source key resolve FIRST-MATCH-WINS across
@@ -1776,7 +1914,7 @@ object GraftSql {
                       val a = parseAssignments(
                         b.replaceFirst("(?is)^UPDATE\\s+SET\\s+", ""),
                         Set(tgtAlias))
-                      validateAssigns(a)
+                      requireAssignable(a, schema, tKeys)
                       i -> a
                   }.toMap
                 val bDelIdx = bySrcClauses.zipWithIndex
@@ -2023,7 +2161,10 @@ object GraftSql {
             bindPositional(schema.fieldNames.toSeq)
           case None => df0
         }
-        (snap.commit(df, t, "append", stats), name)
+        // rows the driver already holds (VALUES, a local frame's view)
+        // land as one file, not one per local-scan partition
+        (snap.commit(if (snap.driverLocal(df)) df.coalesce(1) else df, t,
+          "append", stats), name)
       case InsertOverwriteRe(name0, select) =>
         val name = normName(name0)
         // full-table replace in one commit: files, schema, column

@@ -2,10 +2,12 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
+import org.apache.spark.sql.catalyst.analysis.LocalTempView
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.command.CreateViewCommand
 
 /** Minimal bridge to Spark's package-private Column↔Expression
   * conversion (`org.apache.spark.sql.classic.ExpressionUtils` is
@@ -49,6 +51,52 @@ object Bridge {
         .resolveAndBind(ds.logicalPlan.output, ds.sparkSession.sessionState.analyzer)
         .createDeserializer()
       body(qe.toRdd, fromRow)
+    }
+  }
+
+  /** `df.localCheckpoint(eager = true)` that keeps hold of the RDD it
+    * persists: the same single SQL execution, plan and `LogicalRDD`
+    * leaf as `Dataset.checkpoint`, but when materialization fails the
+    * blocks its finished partitions cached are released through that
+    * RDD alone. Spark's own call leaves them cached with no handle, and
+    * a cleanup that diffs the context's persistent-RDD set would also
+    * evict whatever another session pinned meanwhile.
+    */
+  def localCheckpoint(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[Dataset[Row]]
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      qe.executedPlan.resetMetrics()
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      rdd.localCheckpoint()
+      try rdd.doCheckpoint()
+      catch {
+        case e: Throwable =>
+          rdd.unpersist(blocking = false)
+          throw e
+      }
+      Dataset.ofRows(ds.sparkSession,
+        LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+    }
+  }
+
+  /** `df.createOrReplaceTempView(name)` without a SQL execution: the same
+    * analyzed-plan `CreateViewCommand` that call builds, run directly.
+    * A temp view is session metadata — registering one starts no job,
+    * so it need not open an execution (and its listener events) either.
+    * A multi-part name goes through the stock call and its checks.
+    */
+  def replaceTempView(df: DataFrame, name: String): Unit = {
+    val ds = df.asInstanceOf[Dataset[Row]]
+    ds.sparkSession.sessionState.sqlParser.parseMultipartIdentifier(name) match {
+      case Seq(view) =>
+        CreateViewCommand(TableIdentifier(view), userSpecifiedColumns = Nil,
+          comment = None, collation = None, properties = Map.empty,
+          originalText = None, plan = ds.logicalPlan, allowExisting = false,
+          replace = true, viewType = LocalTempView, isAnalyzed = true)
+          .run(ds.sparkSession)
+        ()
+      case _ => df.createOrReplaceTempView(name)
     }
   }
 }

@@ -82,7 +82,7 @@ class CommitSketchSpec extends AnyFunSuite {
         }
       }
       s.sparkContext.addSparkListener(listener)
-      try { body; Thread.sleep(300) } // let listener events drain
+      try { body; org.apache.spark.ListenerBusDrain(s.sparkContext) }
       finally s.sparkContext.removeSparkListener(listener)
       jobs.get()
     }

@@ -173,7 +173,7 @@ class MergePinSpec extends AnyFunSuite {
           |WHEN NOT MATCHED BY SOURCE AND pin_bys_v.id % 2 = 0
           |  THEN DELETE""".stripMargin)
       // the execution listener is async on the listener bus
-      Thread.sleep(3000)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       assert(scans.get <= 2,
         s"target scanned ${scans.get} times in Dataset executions — " +
           "the by-source anti-join is no longer pinned")
@@ -225,7 +225,7 @@ class MergePinSpec extends AnyFunSuite {
         """MERGE INTO ppr_v USING ppr_src ON ppr_v.id = ppr_src.id
           |WHEN MATCHED THEN UPDATE SET v = ppr_src.bump
           |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (ppr_src.id, 0)""".stripMargin)
-      Thread.sleep(3000)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       // the source pin materialized exactly {id, bump}; no execution
       // anywhere in the statement touched a ballast column
@@ -262,7 +262,7 @@ class MergePinSpec extends AnyFunSuite {
       GraftSql.dml(spark,
         """MERGE INTO pp_v USING pp_src ON pp_v.id = pp_src.id
           |WHEN MATCHED THEN UPDATE SET v = pp_src.v + 1""".stripMargin)
-      Thread.sleep(3000)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       assert(!plans.asScala.exists(_.contains("Window")),
         "an unconditional explicit-body MERGE paid a per-key window")
@@ -272,9 +272,120 @@ class MergePinSpec extends AnyFunSuite {
       GraftSql.dml(spark,
         """MERGE INTO pp_v USING pp_src ON pp_v.id = pp_src.id
           |WHEN MATCHED AND pp_src.v > 4 THEN UPDATE SET v = 0""".stripMargin)
-      Thread.sleep(3000)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       assert(plans.asScala.exists(_.contains("Window")),
         "a conditional MERGE lost the per-row resolution window")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** SQL executions `body` starts, counted off the listener bus. */
+  private def sqlExecutions(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          n.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  test("a star MERGE runs one probe and one write, plus one pin for a source that could diverge") {
+    import spark.implicits._
+    val t = freshTable("pin-execs", 60)
+    GraftSql.registerSnapshot(spark, "pex_v", t, None, Seq("id"))
+    // driver-local source: no pin, so the probe and the write only
+    Seq((5L, 50L), (6L, 60L), (500L, 1L)).toDF("id", "v")
+      .createOrReplaceTempView("pex_local")
+    val local = sqlExecutions {
+      GraftSql.dml(spark,
+        """MERGE INTO pex_v USING pex_local ON pex_v.id = pex_local.id
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    }
+    assert(local <= 2, s"local-source star MERGE ran $local SQL executions")
+    // a range-backed source is pinned once: still evaluated exactly once
+    val rows = 40
+    val acc = instrumentedSource("pex_range", rows)
+    acc.reset()
+    val ranged = sqlExecutions {
+      GraftSql.dml(spark,
+        """MERGE INTO pex_v USING pex_range_star
+          |ON pex_v.id = pex_range_star.id
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    }
+    assert(ranged <= 3, s"range-source star MERGE ran $ranged SQL executions")
+    assert(acc.value == rows.toLong,
+      s"range-source star MERGE evaluated its source ${acc.value}/$rows times")
+    val got = spark.sql("SELECT count(*), sum(v) FROM pex_v").head
+    // ids 0-59 plus 500; rows 0-39 carry (id % 7) + 1000 from the range
+    // source, 5/6 were overwritten again by it, 40-59 keep 0
+    val want = (0 until 40).map(i => i % 7 + 1000L).sum + 1L
+    assert(got.toSeq == Seq(61L, want), got.toSeq)
+  }
+
+  test("a failed pin releases only its own blocks, never another session's pin") {
+    import MergePinSpec.Gate
+    val sc = spark.sparkContext
+    val a = spark.newSession()
+    val b = spark.newSession()
+    Gate.reset()
+    // session A's pin: three partitions finish (and cache their blocks),
+    // the fourth waits until session B has pinned, then fails
+    val gate = udf { (id: Long) =>
+      if (id == 7L) {
+        Gate.aRunning.countDown()
+        Gate.bPinned.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        throw new IllegalStateException("pin materialization failed")
+      }
+      id
+    }
+    val failing = a.range(0, 8, 1, 4).select(gate(col("id")).as("id"))
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val aPin = scala.concurrent.Future(snap.pin(failing))(
+      scala.concurrent.ExecutionContext.global)
+    assert(Gate.aRunning.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "session A's pin never reached its failing partition")
+    val bPinned = snap.pin(b.range(0, 100, 1, 2).toDF("id"))
+    try {
+      Gate.bPinned.countDown()
+      val err = intercept[Exception](scala.concurrent.Await.result(aPin,
+        scala.concurrent.duration.Duration(60, "s")))
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage == "pin materialization failed"), err)
+      val bIds = bPinned.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+      assert(bIds.nonEmpty)
+      val cached = sc.getRDDStorageInfo.filter(i => bIds(i.id))
+      assert(cached.nonEmpty && cached.forall(_.numCachedPartitions > 0),
+        s"session A's failed pin evicted session B's blocks: ${cached.toSeq}")
+      // nothing of A's failed attempt stays behind
+      assert(graftBlocksBesides(before) == bIds,
+        s"failed pin left blocks: ${graftBlocksBesides(before) -- bIds}")
+      assert(bPinned.count() == 100L)
+    } finally snap.unpinBlocking(bPinned)
+  }
+}
+
+object MergePinSpec {
+  /** Cross-thread latches for the two-session pin test (tasks run in
+    * the driver JVM under a local master, so they see this object).
+    */
+  object Gate {
+    @volatile var aRunning = new java.util.concurrent.CountDownLatch(1)
+    @volatile var bPinned = new java.util.concurrent.CountDownLatch(1)
+    def reset(): Unit = {
+      aRunning = new java.util.concurrent.CountDownLatch(1)
+      bPinned = new java.util.concurrent.CountDownLatch(1)
+    }
   }
 }
