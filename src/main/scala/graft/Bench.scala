@@ -77,19 +77,9 @@ object Bench {
       }.getOrElse(Map.empty)
     }
     val allRuns = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try run(fn) catch { case _: Throwable => }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val r1 = once()
-      val r2 = once()
-      val base =
-        if (math.max(r1, r2) / math.max(math.min(r1, r2), 1e-9) > 1.3)
-          Seq(r1, r2, once())
-        else Seq(r1, r2)
-      val runs = canon.get(name) match {
+    val errors = scala.collection.mutable.LinkedHashMap[String, Throwable]()
+    val results = selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      runsOf(() => run(fn), base => canon.get(name) match {
         case Some(c) if base.min > math.max(10 * c, 5.0) =>
           import scala.jdk.CollectionConverters._
           val gcs = java.lang.management.ManagementFactory
@@ -104,16 +94,29 @@ object Bench {
           try System.err.println(fn(spark, sfDir).queryExecution
             .explainString(org.apache.spark.sql.execution.FormattedMode))
           catch { case _: Throwable => }
-          base ++ Seq(once(), once())
-        case _ => base
+          2
+        case _ => 0
+      }) match {
+        case Right(runs) =>
+          allRuns(name) = runs
+          Some(name -> runs.min)
+        case Left(e) =>
+          System.err.println(s"[bench-error] $name: $e")
+          errors(name) = e
+          None
       }
-      allRuns(name) = runs
-      name -> runs.min
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val rawRuns = allRuns.map { case (k, rs) =>
       s"\"" + k + "\":[" + rs.mkString(",") + "]"
+    }.mkString("{", ",", "}")
+    // every selected gate has a status; an error's message is kept, and
+    // its runs and time are not: it is in neither the queries map nor
+    // the total
+    val status = selected.keys.toSeq.sorted.map { n =>
+      jsonString(n) + ":" + jsonString(
+        errors.get(n).map(e => s"error: $e").getOrElse("ok"))
     }.mkString("{", ",", "}")
     // total includes the staging line — the work is real; it is just
     // accounted once, under its own name, instead of inside whichever
@@ -122,7 +125,8 @@ object Bench {
       (if (results.nonEmpty) results.map(_._2).sum else 0.0) + stagingSec
     val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""staging_sec":$stagingSec,"agg":"min-of-runs",""" +
-      s""""queries":$qs,"runs":$rawRuns,"sf":"$sfDir"}"""
+      s""""n_errors":${errors.size},""" +
+      s""""queries":$qs,"runs":$rawRuns,"status":$status,"sf":"$sfDir"}"""
     // durable machine-readable artifact: stdout capture has truncated
     // the per-query map in past rounds (BENCH_r03 kept 60/83 entries),
     // so the complete line is also written to a file the judge can read.
@@ -145,17 +149,55 @@ object Bench {
     // file, stdout is just sized to survive tail capture.
     val head = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""staging_sec":$stagingSec,"agg":"min-of-runs",""" +
-      s""""n_queries":${results.size},"queries_file":"$outFile","queries":{"""
+      s""""n_queries":${results.size},"n_errors":${errors.size},""" +
+      s""""queries_file":"$outFile","queries":{"""
     val tail = s"""},"sf":"$sfDir"}"""
-    val budget = 1800 - head.length - tail.length
-    val bySlow = results.sortBy { case (n, v) => (-v, n) }
-    val parts = scala.collection.mutable.ArrayBuffer[String]()
-    var used = 0
-    bySlow.foreach { case (n, v) =>
-      val e = "\"" + n + "\":" + f"$v%.3f"
-      if (used + e.length + 1 <= budget) { parts += e; used += e.length + 1 }
-    }
-    println(head + parts.mkString(",") + tail)
+    println(head + slowest(results, 1800 - head.length - tail.length) + tail)
     spark.stop()
   }
+
+  /** The timed runs of one gate (min-of-runs): two, a third when those
+    * two disagree by more than 1.3×, then `more(runs so far)` extra ones.
+    * The first run that throws ends the gate as an error: none of its
+    * runs is reported as a time.
+    */
+  private[graft] def runsOf(body: () => Unit,
+      more: Seq[Double] => Int): Either[Throwable, Seq[Double]] = {
+    def once(): Double = {
+      val t0 = System.nanoTime()
+      body()
+      (System.nanoTime() - t0) / 1e9
+    }
+    try {
+      val r1 = once()
+      val r2 = once()
+      val base =
+        if (math.max(r1, r2) / math.max(math.min(r1, r2), 1e-9) > 1.3)
+          Seq(r1, r2, once())
+        else Seq(r1, r2)
+      Right(base ++ Seq.fill(more(base))(once()))
+    } catch { case e: Throwable => Left(e) }
+  }
+
+  /** The slowest `"name":seconds` entries (three decimals, whatever the
+    * default locale) that fit `budget` chars, comma-joined.
+    */
+  private[graft] def slowest(results: Seq[(String, Double)], budget: Int): String = {
+    val parts = scala.collection.mutable.ArrayBuffer[String]()
+    var used = 0
+    results.sortBy { case (n, v) => (-v, n) }.foreach { case (n, v) =>
+      val e = "\"" + n + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, v)
+      if (used + e.length + 1 <= budget) { parts += e; used += e.length + 1 }
+    }
+    parts.mkString(",")
+  }
+
+  /** `s` as a JSON string literal. */
+  private def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u" + Integer.toHexString(c | 0x10000).substring(1)
+      case c => c.toString
+    } + "\""
 }

@@ -213,8 +213,23 @@ object SnapshotLog {
     */
   private val ManifestNameRe = """v(\d{5,})\.json""".r
 
+  /** The FileSystem of table path `p`. A `file:` table gets the
+    * fork-free twin of Hadoop's local FileSystem
+    * ([[ForkFreeLocalFileSystem]]): its creates and directory makes set
+    * their POSIX modes through java.nio instead of a `chmod` process per
+    * file, so manifest publishes (the LogStore's temp writes) and
+    * [[writeData]]'s commit start no process. Every other scheme gets
+    * the FileSystem Hadoop resolves.
+    */
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    ForkFreeLocalFileSystem.of(p, spark.sparkContext.hadoopConfiguration)
+
+  /** `df.write` for files under a table on `fs`: on a `file:` table the
+    * write job's committer and tasks use the same fork-free FileSystem
+    * as [[fsOf]] (see [[ForkFreeLocalFileSystem.writeOptions]]).
+    */
+  private def writerFor(df: DataFrame, fs: FileSystem) =
+    df.write.options(ForkFreeLocalFileSystem.writeOptions(fs))
 
   /** Highest committed version, from a listing of the (small) log dir
     * only. `.tmp-*` leftovers from crashed commits are ignored.
@@ -434,36 +449,78 @@ object SnapshotLog {
   /** Escape hatch for [[shapeRewrite]] (default on). */
   val ShapedRewritesConf = "spark.graft.snapshot.shapedRewrites"
 
-  /** Shape a CoW mutation rewrite for write. A rewrite's input unions
-    * file-scan partitions (the survivors) with batch-side frames whose
-    * partitioning is whatever the statement's joins produced, and the
-    * parquet write lands ONE FILE PER PARTITION — measured 32-34 files
-    * of ~15 KB per MERGE commit on the sf0.1 gates, i.e. one near-empty
-    * file per shuffle partition at any scale. That small-file debt
-    * compounds into every later scan, candidacy probe, manifest and
-    * footer harvest (guide §6: aim for advisory-sized output files).
-    * An AQE-rebalanced exchange sizes the output to the session's
-    * advisory partition size while upstream compute keeps its
-    * parallelism — the Delta/Iceberg "optimized write" trade: one
-    * churn-sized shuffle (the rewrite set, never the table) buys sane
-    * file counts. The within-partition layout sort still applies so
-    * rewritten files stay internally ordered; compact remains the op
-    * that restores the GLOBAL layout. Disable via
-    * [[ShapedRewritesConf]].
+  /** How a CoW rewrite's input is partitioned: what [[shapeRewrite]]
+    * needs to size its output files without a redundant exchange.
     */
-  private def shapeRewrite(df: DataFrame,
-      layout: Option[LayoutSpec]): DataFrame = {
-    // Also gated on AQE: the REBALANCE hint only becomes a size-
-    // targeted coalescing exchange under adaptive execution — with AQE
-    // off it plans a plain round-robin shuffle at
-    // spark.sql.shuffle.partitions, which for previously shuffle-free
-    // rewrites (deleteWhere: one partition per surviving file) would
-    // ADD a shuffle and potentially MORE small files. Degrade to the
-    // sort-only path there.
-    val on = df.sparkSession.conf
-      .get(ShapedRewritesConf, "true").toBoolean &&
-      df.sparkSession.sessionState.conf.adaptiveExecutionEnabled
-    sortForLayout(if (on) df.hint("rebalance") else df, layout)
+  private sealed trait RewriteInput
+
+  /** Rows of exactly `files`, read and changed row by row (no exchange
+    * between the scan and the write beyond a key-set join): the scan's
+    * partitioning, one or a few partitions per file.
+    */
+  private final case class Scanned(files: Seq[FileEntry]) extends RewriteInput
+
+  /** The output of a join whose exchange adaptive execution already
+    * coalesces to the advisory partition size.
+    */
+  private case object Joined extends RewriteInput
+
+  /** Rows that come at least in part from a caller's frame (a batch, a
+    * pin, driver-held rows), alone or unioned with file-scan survivors:
+    * partitioned however the caller's plan left them.
+    */
+  private case object Batched extends RewriteInput
+
+  /** Shape a CoW mutation rewrite for write. The parquet write lands ONE
+    * FILE PER PARTITION, so an unshaped rewrite leaves as many files as
+    * its input has partitions — measured 32-34 files of ~15 KB per MERGE
+    * commit on the sf0.1 gates when batch-side frames kept the shuffle
+    * partitioning. That small-file debt compounds into every later
+    * scan, candidacy probe, manifest and footer harvest (guide §6: aim
+    * for advisory-sized output files). What sizes the output depends on
+    * the input ([[RewriteInput]]):
+    *
+    *  - [[Scanned]]: a narrow `coalesce(ceil(touched bytes / advisory
+    *    partition size))`, the bytes taken from the manifest. A tiny
+    *    rewrite of several files lands as one file, with no shuffle and
+    *    no extra job; a large one keeps about one task per advisory
+    *    size of input.
+    *  - [[Joined]]: nothing. Adaptive execution already coalesces the
+    *    join's exchange to the advisory size; a REBALANCE on top would
+    *    shuffle the joined rows again and merge nothing.
+    *  - [[Batched]]: an AQE-rebalanced exchange (REBALANCE), which sizes
+    *    the output to the advisory partition size while upstream
+    *    compute keeps its parallelism — the Delta/Iceberg "optimized
+    *    write" trade: one churn-sized shuffle (the rewrite set, never the
+    *    table) buys sane file counts. Only under adaptive execution: with
+    *    it off, the hint plans a plain round-robin shuffle at
+    *    `spark.sql.shuffle.partitions`, which could add files, so the
+    *    frame is written as it is.
+    *
+    * The within-partition layout sort applies in every case, so
+    * rewritten files stay internally ordered; compact remains the op
+    * that restores the GLOBAL layout. [[ShapedRewritesConf]] = false
+    * turns all three off.
+    */
+  private def shapeRewrite(df: DataFrame, layout: Option[LayoutSpec],
+      input: RewriteInput): DataFrame = {
+    val spark = df.sparkSession
+    val sized =
+      if (!spark.conf.get(ShapedRewritesConf, "true").toBoolean) df
+      else input match {
+        case Scanned(files) =>
+          val target = spark.sessionState.conf.getConf(
+            org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+          val bytes = files.map(_.bytes).sum
+          df.coalesce(math.max(1L, (bytes + target - 1) / target)
+            .min(Int.MaxValue.toLong).toInt)
+        case Joined => df
+        case Batched =>
+          if (spark.sessionState.conf.adaptiveExecutionEnabled)
+            df.hint("rebalance")
+          else df
+      }
+    sortForLayout(sized, layout)
   }
 
   /** Check an appended frame against the table schema and put its
@@ -552,7 +609,11 @@ object SnapshotLog {
     * the footer can't vouch for (strings — writers may truncate binary
     * stats, and these stats are load-bearing for file classification)
     * fall back to one Spark pass over the new files only. Blooms, when
-    * requested, are one more pass over the new files.
+    * requested, are one more pass over the new files. On a `file:`
+    * table the write job (committer and tasks) runs on the same
+    * fork-free FileSystem as [[fsOf]]: the attempt directory, part
+    * files, `.crc` sidecars and `_SUCCESS` land as through Hadoop's
+    * local FileSystem, with no `chmod` process per file.
     */
   /** KMV sketch size: 64 smallest distinct 32-bit hashes per
     * (file, column) — ~512 bytes of manifest per sketch, relative
@@ -594,7 +655,7 @@ object SnapshotLog {
     val statsColsP = statsCols.map(toPhys)
     val bloomColsP = bloomCols.map(toPhys)
     val ndvColsP = ndvCols.map(toPhys)
-    try landed.write.mode("overwrite").parquet(dataDir.toString)
+    try writerFor(landed, fs).mode("overwrite").parquet(dataDir.toString)
     catch {
       case ex: Throwable =>
         try fs.delete(dataDir, true) catch { case _: Exception => () }
@@ -1410,7 +1471,8 @@ object SnapshotLog {
         // `!pred` (NULL for NULL inputs) would silently drop null rows
         else writeData(
           shapeRewrite(readFiles(spark, table, m, rewrite)
-            .where(!(rangePredicate(conjuncts) <=> lit(true))), m.layout),
+            .where(!(rangePredicate(conjuncts) <=> lit(true))), m.layout,
+            Scanned(rewrite)),
           table, v0 + 1, (statsCols ++ conjuncts.map(_.column)).distinct,
           physical = m.physical)
       val v = publishMutation(spark, table, m, "delete",
@@ -1472,7 +1534,8 @@ object SnapshotLog {
             case None => col(f.name)
           }
         }.toIndexedSeq: _*)
-      val newFiles = writeData(shapeRewrite(updated, m.layout), table,
+      val newFiles = writeData(shapeRewrite(updated, m.layout,
+        Scanned(rewrite)), table,
         v0 + 1, (statsCols ++ conjuncts.map(_.column)).distinct,
         physical = m.physical)
       val v = publishMutation(spark, table, m, "update",
@@ -1518,8 +1581,8 @@ object SnapshotLog {
             case None => col(f.name)
           }
         }.toIndexedSeq: _*)
-      val newFiles = writeData(shapeRewrite(updated, m.layout), table,
-        v0 + 1, statsCols, physical = m.physical)
+      val newFiles = writeData(shapeRewrite(updated, m.layout,
+        Scanned(rewrite)), table, v0 + 1, statsCols, physical = m.physical)
       val v = publishMutation(spark, table, m, "update",
         touched = rewrite, replacement = Nil, added = newFiles,
         eqAdded = Nil)
@@ -1684,8 +1747,9 @@ object SnapshotLog {
         // upsert/applyChanges): a registration whose statsCols omit the
         // key must not produce stat-less rewrites that defeat every
         // subsequent mutation's tuple-interval pruning
-        val newFiles = writeData(shapeRewrite(updated, m.layout), table,
-          v0 + 1, (statsCols ++ keyCols).distinct, physical = m.physical)
+        val newFiles = writeData(shapeRewrite(updated, m.layout,
+          Scanned(rewrite)), table, v0 + 1, (statsCols ++ keyCols).distinct,
+          physical = m.physical)
         val v = publishMutation(spark, table, m, "update",
           touched = rewrite, replacement = Nil, added = newFiles,
           eqAdded = Nil)
@@ -1806,7 +1870,7 @@ object SnapshotLog {
           else {
             val r = f"data/v$v%05d-dv-" +
               java.util.UUID.randomUUID().toString.substring(0, 8)
-            full.write.parquet(new Path(tbl, r).toString)
+            writerFor(full, fs).parquet(new Path(tbl, r).toString)
             Some(r)
           }
         full.unpersist()
@@ -1910,7 +1974,7 @@ object SnapshotLog {
     // key stats always land on the new files — exact candidacy for the
     // NEXT batch depends on them (a stat-less file is always a candidate)
     val newFiles = writeData(
-      shapeRewrite(existing.unionByName(aligned), m.layout), table, v,
+      shapeRewrite(existing.unionByName(aligned), m.layout, Batched), table, v,
       (statsCols ++ keyCols).distinct, physical = m.physical)
     val vPub = publishMutation(spark, table, m, "upsert",
       touched = rewrite.map(_._1), replacement = Nil,
@@ -1956,7 +2020,8 @@ object SnapshotLog {
   private[graft] val MergeChangedCol = "__graft_changed"
 
   /** Copy-on-write MERGE by key in two Spark executions: [[keyProbe]]
-    * over `source` against one manifest, then ONE write of
+    * over `source` against one manifest (over one partition when the
+    * source is [[driverLocal]], so it runs as one job), then ONE write of
     * `rewrite(target, guardDups)` through [[shapeRewrite]] →
     * [[writeData]] → [[publishMutation]] — the op name, stats columns and
     * OCC of [[upsert]]. `target` holds the live rows of exactly the files
@@ -1979,7 +2044,10 @@ object SnapshotLog {
       throw new IllegalArgumentException(s"no committed version in $table"))
     val m = manifest(spark, table, v0)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
-    val probe = keyProbe(source, m.files, keyCols, dupCheck = true)
+    // driver-held rows probe as one partition: the count-distinct then
+    // plans with no exchange, one job instead of three
+    val probe = keyProbe(if (driverLocal(source)) source.coalesce(1) else source,
+      m.files, keyCols, dupCheck = true)
     val (touched, kept) =
       m.files.zipWithIndex.partition(p => probe.touched(p._2))
     if (probe.rows == 0L || (touched.isEmpty && !mayInsert))
@@ -1992,8 +2060,11 @@ object SnapshotLog {
     val out = rewrite(target, probe.dupKeys && touched.nonEmpty)
       .observe(changed, count(when(col(MergeChangedCol), 1)).as("n"))
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    val newFiles = writeData(shapeRewrite(out, m.layout), table, v0 + 1,
-      (statsCols ++ keyCols).distinct, physical = m.physical)
+    // with candidate files the rewrite is a full outer join, sized by
+    // its own exchange; without, it is the source rows alone
+    val newFiles = writeData(
+      shapeRewrite(out, m.layout, if (touched.isEmpty) Batched else Joined),
+      table, v0 + 1, (statsCols ++ keyCols).distinct, physical = m.physical)
     if (changed.get("n") == 0L) {
       // nothing matched and nothing inserted: the files just written are
       // an unreferenced attempt, like a lost commit race's
@@ -2116,8 +2187,8 @@ object SnapshotLog {
           .where(!(((col(marker) === 1) && residualHolds) <=> true))
           .select(schema.fieldNames.map(col).toIndexedSeq: _*))
       val out = (existing.toSeq ++ aligned).reduce(_ unionByName _)
-      val newFiles = writeData(shapeRewrite(out, m.layout), table, v0 + 1,
-        (statsCols ++ keyCols).distinct, physical = m.physical)
+      val newFiles = writeData(shapeRewrite(out, m.layout, Batched), table,
+        v0 + 1, (statsCols ++ keyCols).distinct, physical = m.physical)
       val v = publishMutation(spark, table, m, "upsert",
         touched = rewrite, replacement = Nil, added = newFiles, eqAdded = Nil)
       MutationStats(v, m.files.size - rewrite.size, 0, rewrite.size)
@@ -2244,7 +2315,7 @@ object SnapshotLog {
     // key stats always land on the new files — exact candidacy for the
     // NEXT batch depends on them (a stat-less file is always a candidate)
     val newFiles = writeData(
-      shapeRewrite(existing.unionByName(upserts), m.layout), table, v,
+      shapeRewrite(existing.unionByName(upserts), m.layout, Batched), table, v,
       (statsCols ++ keyCols).distinct, physical = m.physical)
     try {
       val vPub = publishMutation(spark, table, m, "apply-changes",
@@ -2402,7 +2473,7 @@ object SnapshotLog {
       "duplicate keys in MOR upsert batch — pre-resolve with latest-wins " +
         "(operators.CdcMerge) before applying")
     val v = v0 + 1
-    val newFiles = writeData(shapeRewrite(aligned, m.layout), table, v,
+    val newFiles = writeData(shapeRewrite(aligned, m.layout, Batched), table, v,
       (statsCols ++ keyCols).distinct, physical = m.physical)
     val eq = writeEqKeys(spark, table, v,
       aligned.select(keyCols.map(col): _*),
@@ -2470,8 +2541,9 @@ object SnapshotLog {
       s"key column names may not contain ',': $physKeys")
     val rel = f"data/v$v%05d-eq-" +
       java.util.UUID.randomUUID().toString.substring(0, 8)
-    keys.distinct().toDF(physKeys: _*)
-      .write.parquet(new Path(new Path(table), rel).toString)
+    val tbl = new Path(table)
+    writerFor(keys.distinct().toDF(physKeys: _*), fsOf(spark, tbl))
+      .parquet(new Path(tbl, rel).toString)
     EqDelete(rel, physKeys.mkString(","), rows, seq)
   }
 
