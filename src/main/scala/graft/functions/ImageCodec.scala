@@ -1,17 +1,29 @@
 package graft.functions
 
-import java.awt.image.BufferedImage
-import java.io.ByteArrayInputStream
+import java.awt.image.{BufferedImage, DataBufferByte, PixelInterleavedSampleModel}
+import java.io.{ByteArrayInputStream, IOException}
+import javax.imageio.ImageReader
+import javax.imageio.spi.{IIORegistry, ImageReaderSpi}
+import javax.imageio.stream.MemoryCacheImageInputStream
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow,
+  ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Real in-JVM image decode for the multimodal path, built on
   * `javax.imageio` (ships with the JDK — PNG/JPEG/GIF/BMP). This is the
-  * codec-backed implementation the [[Multimodal]] stub documents: same
-  * partition-level shape (one reader per partition via mapPartitions),
-  * so swapping stub→real changes no pipeline topology.
+  * codec-backed implementation the [[Multimodal]] stub documents. Every
+  * entry point runs one kernel, [[ImageCodec.decodePixels]]: a reused
+  * per-thread `ImageReader` over an in-memory stream and bulk raster
+  * reads. On a column the kernel is one native Catalyst expression,
+  * [[ImageDecode]], so decoding stays inside whole-stage codegen.
   *
   * Decoded representation matches the reference's CHW float convention
   * (reference sdata/mappers/sample_mappers.py:160-165 asserts
@@ -61,61 +73,121 @@ object ImageCodec {
   def isImageSpec(s: String): Boolean = specs.contains(s)
   def imageSpecs: Set[String] = specs.keySet
 
-  /** Decode bytes per a wds image spec. Grayscale uses the ITU-R 601-2
-    * integer luma PIL's convert("L") uses: (299r + 587g + 114b) / 1000.
-    */
-  def decodeAs(spec: String, bytes: Array[Byte]): Option[DecodedImage] = {
-    val (gray, unit, chw) = specs.getOrElse(spec,
-      throw new IllegalArgumentException(
-        s"unknown image spec '$spec' (known: ${specs.keys.toSeq.sorted.mkString(", ")})"))
-    val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(bytes))
-    if (img == null) None
-    else {
-      val w = img.getWidth; val h = img.getHeight
-      val c = if (gray) 1 else 3
-      val out = new Array[Float](c * h * w)
-      val scale = if (unit) 255.0f else 1.0f
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          val r = (rgb >> 16) & 0xff; val g = (rgb >> 8) & 0xff; val b = rgb & 0xff
-          if (gray) {
-            val lum = (299 * r + 587 * g + 114 * b) / 1000
-            out(y * w + x) = lum / scale
-          } else if (chw) {
-            out(0 * h * w + y * w + x) = r / scale
-            out(1 * h * w + y * w + x) = g / scale
-            out(2 * h * w + y * w + x) = b / scale
-          } else {
-            val base = (y * w + x) * 3
-            out(base) = r / scale
-            out(base + 1) = g / scale
-            out(base + 2) = b / scale
-          }
-          x += 1
-        }
-        y += 1
-      }
-      Some(DecodedImage(w, h, c, scala.collection.immutable.ArraySeq.unsafeWrapArray(out)))
+  /** Decode bytes per a wds image spec ([[decodePixels]]). */
+  def decodeAs(spec: String, bytes: Array[Byte]): Option[DecodedImage] =
+    decodePixels(spec, bytes).map { case (w, h, c, px) =>
+      DecodedImage(w, h, c, scala.collection.immutable.ArraySeq.unsafeWrapArray(px))
     }
-  }
 
   /** Column-level decoder for one spec (used by the D3 decode registry):
     * binary -> decoded struct, null for undecodable payloads.
     */
-  def decodeUdf(spec: String): org.apache.spark.sql.Column => org.apache.spark.sql.Column = {
+  def decodeUdf(spec: String): Column => Column = {
     require(isImageSpec(spec), s"unknown image spec '$spec'")
-    // Try, not just the ImageIO null: a RECOGNIZED-but-corrupt payload
-    // (valid PNG signature, truncated chunk) makes ImageIO.read THROW
-    // rather than return null, and a corrupt member must not fail a
-    // skip-policy pipeline.
-    val f = org.apache.spark.sql.functions.udf(
-      (bytes: Array[Byte]) =>
-        if (bytes == null) None
-        else scala.util.Try(decodeAs(spec, bytes)).toOption.flatten)
-    c => f(c)
+    c => Bridge.column(ImageDecode(Bridge.expression(c), spec))
+  }
+
+  /** The decode kernel: (width, height, channels, pixels laid out per
+    * `spec`); None for a null payload, one no ImageIO reader recognizes
+    * or any `NonFatal` its decode throws (a truncated PNG). Grayscale
+    * uses the ITU-R 601-2 integer luma PIL's convert("L") uses: (299r +
+    * 587g + 114b) / 1000. A side above `maxSide` scales down to it by
+    * nearest neighbour at source index floor(x·w/nw); only the sampled
+    * source pixels are read. */
+  def decodePixels(spec: String, bytes: Array[Byte],
+      maxSide: Int = Int.MaxValue): Option[(Int, Int, Int, Array[Float])] = {
+    val (gray, unit, chw) = specs.getOrElse(spec,
+      throw new IllegalArgumentException(
+        s"unknown image spec '$spec' (known: ${specs.keys.toSeq.sorted.mkString(", ")})"))
+    try Option(if (bytes == null) null else readImage(bytes)).map { img =>
+      val w = img.getWidth; val h = img.getHeight
+      val down = math.min(1.0, maxSide.toDouble / math.max(w, h))
+      val (nw, nh) = if (down == 1.0) (w, h)
+        else (math.max(1, (w * down).toInt), math.max(1, (h * down).toInt))
+      val rgb = packedRgb(img, Array.tabulate(nw)(x => (x.toLong * w / nw).toInt),
+        Array.tabulate(nh)(y => (y.toLong * h / nh).toInt))
+      val plane = rgb.length
+      val c = if (gray) 1 else 3
+      val out = new Array[Float](Math.multiplyExact(c, plane))
+      val scale = if (unit) 255.0f else 1.0f
+      var o = 0
+      while (o < plane) {
+        val p = rgb(o)
+        val r = (p >> 16) & 0xff; val g = (p >> 8) & 0xff; val b = p & 0xff
+        if (gray) out(o) = (299 * r + 587 * g + 114 * b) / 1000 / scale
+        else if (chw) {
+          out(o) = r / scale; out(plane + o) = g / scale; out(2 * plane + o) = b / scale
+        } else {
+          out(3 * o) = r / scale; out(3 * o + 1) = g / scale; out(3 * o + 2) = b / scale
+        }
+        o += 1
+      }
+      (nw, nh, c, out)
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** Readers by provider, per thread: a reader is stateful, and building
+    * one per image costs about as much as reading a small image. */
+  private val readers = ThreadLocal.withInitial[java.util.HashMap[ImageReaderSpi, ImageReader]](
+    () => new java.util.HashMap())
+
+  /** `ImageIO.read`'s provider choice (the first in registry order whose
+    * `canDecodeInput` accepts the stream) and read call, over an in-memory
+    * stream instead of the temp file the global `ImageIO.getUseCache`
+    * default makes, with a cached reader; one that threw is dropped. */
+  private def readImage(bytes: Array[Byte]): BufferedImage = {
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+    def canDecode(spi: ImageReaderSpi): Boolean =
+      try { in.mark(); val ok = spi.canDecodeInput(in); in.reset(); ok }
+      catch { case _: IOException => false }
+    try {
+      IIORegistry.getDefaultInstance.getServiceProviders(classOf[ImageReaderSpi], true)
+        .asScala.find(canDecode) match {
+        case None => null
+        case Some(spi) =>
+          val cache = readers.get
+          val reader = cache.computeIfAbsent(spi, _.createReaderInstance())
+          try { reader.setInput(in, true, true); reader.read(0, reader.getDefaultReadParam) }
+          catch { case e: Throwable => cache.remove(spi); throw e }
+          finally reader.setInput(null)
+      }
+    } finally in.close()
+  }
+
+  /** 0x__RRGGBB of source pixel (xs(i), ys(j)) at j·xs.length + i. The
+    * sRGB 8-bit interleaved types read the data buffer in bulk, bit-exact
+    * with `getRGB`; 8-bit gray keeps its stored sample as r = g = b, as
+    * PIL does, where `getRGB` applies Java's linear-gray→sRGB curve.
+    * Other types use `getRGB`. */
+  private[graft] def packedRgb(img: BufferedImage, xs: Array[Int], ys: Array[Int]): Array[Int] = {
+    import BufferedImage._
+    val nw = xs.length
+    val out = new Array[Int](Math.multiplyExact(nw, ys.length))
+    val raster = img.getRaster
+    val tx = raster.getSampleModelTranslateX; val ty = raster.getSampleModelTranslateY
+    val srgb = img.getColorModel.getColorSpace.isCS_sRGB
+    (img.getType, raster.getSampleModel, raster.getDataBuffer) match {
+      case (t, sm: PixelInterleavedSampleModel, db: DataBufferByte)
+          if t == TYPE_BYTE_GRAY || (srgb && (t == TYPE_3BYTE_BGR || t == TYPE_4BYTE_ABGR)) =>
+        val d = db.getData; val ps = sm.getPixelStride; val ss = sm.getScanlineStride
+        val bands = sm.getBandOffsets
+        val (ro, go, bo) = if (t == TYPE_BYTE_GRAY) (bands(0), bands(0), bands(0))
+          else (bands(0), bands(1), bands(2))
+        var j = 0
+        while (j < ys.length) {
+          val row = db.getOffset + (ys(j) - ty) * ss - tx * ps
+          var i = 0
+          while (i < nw) {
+            val k = row + xs(i) * ps
+            out(j * nw + i) = (d(k + ro) & 0xff) << 16 | (d(k + go) & 0xff) << 8 | (d(k + bo) & 0xff)
+            i += 1
+          }
+          j += 1
+        }
+      case _ =>
+        for (j <- ys.indices; i <- xs.indices) out(j * nw + i) = img.getRGB(xs(i), ys(j))
+    }
+    out
   }
 
   @inline private def pixelAt(px: Seq[Float], w: Int, h: Int, c: Int,
@@ -243,74 +315,44 @@ object ImageCodec {
           }
           y += 1
         }
-      case Interp.Lanczos =>
-        val wx = new Array[Double](6); val wy = new Array[Double](6)
+      case Interp.Bicubic | Interp.Lanczos =>
+        // separable taps around floor(s): Keys cubic (4, as is) or
+        // Lanczos-3 (6, weights normalized to sum 1, as PIL does)
+        val normalize = mode == Interp.Lanczos
+        val taps = if (normalize) 6 else 4
+        @inline def kernel(t: Double): Double = if (normalize) lanczosW(t) else cubicW(t)
+        val back = taps / 2 - 1
+        val wx = new Array[Double](taps); val wy = new Array[Double](taps)
         var y = 0
         while (y < nh) {
           val sy = (y + 0.5) * syScale - 0.5
           val y0 = math.floor(sy).toInt; val fy = sy - y0
           var wySum = 0.0
           var j = 0
-          while (j < 6) { wy(j) = lanczosW(fy - (j - 2)); wySum += wy(j); j += 1 }
+          while (j < taps) { wy(j) = kernel(fy - (j - back)); wySum += wy(j); j += 1 }
           var x = 0
           while (x < nw) {
             val sx = (x + 0.5) * sxScale - 0.5
             val x0 = math.floor(sx).toInt; val fx = sx - x0
             var wxSum = 0.0
             var i = 0
-            while (i < 6) { wx(i) = lanczosW(fx - (i - 2)); wxSum += wx(i); i += 1 }
+            while (i < taps) { wx(i) = kernel(fx - (i - back)); wxSum += wx(i); i += 1 }
             val norm = wySum * wxSum
             var ch = 0
             while (ch < c) {
               var acc = 0.0
               j = 0
-              while (j < 6) {
+              while (j < taps) {
                 var rowAcc = 0.0
                 i = 0
-                while (i < 6) {
-                  rowAcc += wx(i) * src(ch, y0 + j - 2, x0 + i - 2)
+                while (i < taps) {
+                  rowAcc += wx(i) * src(ch, y0 + j - back, x0 + i - back)
                   i += 1
                 }
                 acc += wy(j) * rowAcc
                 j += 1
               }
-              acc /= norm
-              val clamped = if (acc < 0.0) 0.0 else if (acc > clampHi) clampHi.toDouble else acc
-              put(ch, y, x, clamped.toFloat)
-              ch += 1
-            }
-            x += 1
-          }
-          y += 1
-        }
-      case Interp.Bicubic =>
-        val wx = new Array[Double](4); val wy = new Array[Double](4)
-        var y = 0
-        while (y < nh) {
-          val sy = (y + 0.5) * syScale - 0.5
-          val y0 = math.floor(sy).toInt; val fy = sy - y0
-          var j = 0
-          while (j < 4) { wy(j) = cubicW(fy - (j - 1)); j += 1 }
-          var x = 0
-          while (x < nw) {
-            val sx = (x + 0.5) * sxScale - 0.5
-            val x0 = math.floor(sx).toInt; val fx = sx - x0
-            var i = 0
-            while (i < 4) { wx(i) = cubicW(fx - (i - 1)); i += 1 }
-            var ch = 0
-            while (ch < c) {
-              var acc = 0.0
-              j = 0
-              while (j < 4) {
-                var rowAcc = 0.0
-                i = 0
-                while (i < 4) {
-                  rowAcc += wx(i) * src(ch, y0 + j - 1, x0 + i - 1)
-                  i += 1
-                }
-                acc += wy(j) * rowAcc
-                j += 1
-              }
+              if (normalize) acc /= norm
               val clamped = if (acc < 0.0) 0.0 else if (acc > clampHi) clampHi.toDouble else acc
               put(ch, y, x, clamped.toFloat)
               ch += 1
@@ -374,99 +416,47 @@ object ImageCodec {
   }
 
   /** Decode bytes → (w, h, c, chw pixels in [0,1]); None on undecodable
-    * payloads (feeds the engine error policy, not an exception).
-    */
-  def decode(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Float])] = {
-    val img = javax.imageio.ImageIO.read(new ByteArrayInputStream(bytes))
-    if (img == null) None
-    else {
-      val w = img.getWidth
-      val h = img.getHeight
-      val c = 3
-      val out = new Array[Float](c * h * w)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          out(0 * h * w + y * w + x) = ((rgb >> 16) & 0xff) / 255.0f
-          out(1 * h * w + y * w + x) = ((rgb >> 8) & 0xff) / 255.0f
-          out(2 * h * w + y * w + x) = (rgb & 0xff) / 255.0f
-          x += 1
-        }
-        y += 1
-      }
-      Some((w, h, c, out))
-    }
-  }
+    * payloads (feeds the engine error policy, not an exception). */
+  def decode(bytes: Array[Byte]): Option[(Int, Int, Int, Array[Float])] =
+    decodePixels("torchrgb", bytes)
 
-  /** Deterministic nearest-neighbor resize of a decoded image. */
-  def resizeNearest(img: BufferedImage, newW: Int, newH: Int): BufferedImage = {
-    val out = new BufferedImage(newW, newH, BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < newH) {
-      val sy = (y.toLong * img.getHeight / newH).toInt
-      var x = 0
-      while (x < newW) {
-        val sx = (x.toLong * img.getWidth / newW).toInt
-        out.setRGB(x, y, img.getRGB(sx, sy))
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
-  /** Partition-level decode stage: appends a `decoded` struct column
-    * (null for undecodable payloads — route via ErrorPolicy). Optional
-    * `maxSide` applies a nearest-neighbor downscale before pixel
-    * extraction, bounding memory per row.
-    */
+  /** Decode stage: appends a `decoded` struct column (CHW, [0,1]; null
+    * for undecodable payloads — route via ErrorPolicy). Optional `maxSide`
+    * downscales by nearest neighbour during decode, bounding row memory. */
   def decodeImages(df: DataFrame, payloadCol: String,
-      maxSide: Option[Int] = None): DataFrame = {
-    val schema = StructType(df.schema.fields :+
-      StructField("decoded", decodedSchema, nullable = true))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-    val idx = df.schema.fieldIndex(payloadCol)
-    df.mapPartitions { rows =>
-      // ImageIO scans for plugins lazily; touching it here = once per
-      // partition, mirroring the one-codec-per-partition contract.
-      javax.imageio.ImageIO.getUseCache
-      rows.map { r =>
-        val payload = r.get(idx).asInstanceOf[Array[Byte]]
-        val decoded: Row =
-          if (payload == null) null
-          else {
-            val img0 = javax.imageio.ImageIO.read(new ByteArrayInputStream(payload))
-            if (img0 == null) null
-            else {
-              val img = maxSide match {
-                case Some(m) if math.max(img0.getWidth, img0.getHeight) > m =>
-                  val scale = m.toDouble / math.max(img0.getWidth, img0.getHeight)
-                  resizeNearest(img0,
-                    math.max(1, (img0.getWidth * scale).toInt),
-                    math.max(1, (img0.getHeight * scale).toInt))
-                case _ => img0
-              }
-              val w = img.getWidth; val h = img.getHeight
-              val px = new Array[Float](3 * h * w)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val rgb = img.getRGB(x, y)
-                  px(0 * h * w + y * w + x) = ((rgb >> 16) & 0xff) / 255.0f
-                  px(1 * h * w + y * w + x) = ((rgb >> 8) & 0xff) / 255.0f
-                  px(2 * h * w + y * w + x) = (rgb & 0xff) / 255.0f
-                  x += 1
-                }
-                y += 1
-              }
-              Row(w, h, 3, px.toSeq)
-            }
-          }
-        Row.fromSeq(r.toSeq :+ decoded)
-      }
-    }(enc)
+      maxSide: Option[Int] = None): DataFrame =
+    df.withColumn("decoded", Bridge.column(ImageDecode(
+      Bridge.expression(df.col(payloadCol)), "torchrgb", maxSide.getOrElse(Int.MaxValue))))
+}
+
+/** Binary payload → [[ImageCodec.decodedSchema]] struct per a wds image
+  * spec, as a native expression: [[ImageCodec.decodePixels]] writes its
+  * floats straight into an `UnsafeArrayData`, with no Scala UDF, encoder
+  * or boxed `Seq[Float]` in between. Null for a null, unrecognized or
+  * corrupt payload.
+  */
+case class ImageDecode(child: Expression, spec: String, maxSide: Int = Int.MaxValue)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes = Seq(BinaryType)
+  override def dataType: DataType = ImageCodec.decodedSchema
+  override def nullable: Boolean = true
+
+  def decodeRow(bytes: Array[Byte]): InternalRow =
+    ImageCodec.decodePixels(spec, bytes, maxSide) match {
+      case Some((w, h, c, px)) =>
+        new GenericInternalRow(Array[Any](w, h, c, UnsafeArrayData.fromPrimitiveArray(px)))
+      case None => null
+    }
+
+  override def nullSafeEval(input: Any): Any = decodeRow(input.asInstanceOf[Array[Byte]])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("imageDecode", this, classOf[ImageDecode].getName)
+    nullSafeCodeGen(ctx, ev, b =>
+      s"${ev.value} = $ref.decodeRow($b);\n${ev.isNull} = ${ev.value} == null;")
   }
+
+  override protected def withNewChildInternal(newChild: Expression): ImageDecode =
+    copy(child = newChild)
 }

@@ -17,9 +17,9 @@ import org.apache.spark.sql.types._
   * STUBBED here behind [[decodeStub]]: a deterministic fake that hashes
   * the payload instead of decoding pixels. Everything around it — the
   * schema contract, null/error propagation, partition-level batching —
-  * is real: swap `decodeStub` for a codec-backed implementation (e.g.
-  * javax.imageio inside `mapPartitions`, one codec instance per
-  * partition, never per row) and nothing else changes.
+  * is real: swap `decodeStub` for a codec-backed implementation (as
+  * [[ImageCodec]] does: one column expression over a reader reused per
+  * thread, never built per row) and nothing else changes.
   */
 object Multimodal {
 

@@ -39,17 +39,19 @@ object Decoders {
     Decoder("json_struct", c => from_json(decode(c, "UTF-8"), schema))
 
   /** Image decode STUB (see graft.functions.Multimodal.decodeStub): the
-    * pipeline keeps image bytes opaque + deterministic digest; swap for
-    * a codec-backed mapPartitions implementation without touching the
-    * pipeline shape.
+    * pipeline keeps image bytes opaque + deterministic digest. [[image]]
+    * is the real decoder of the same shape: a column expression, so
+    * swapping one for the other leaves the pipeline as it is.
     */
   val imageStub: Decoder =
     Decoder("image_stub", c => graft.functions.Multimodal.decodeStub(c))
 
   /** Real image decode for a wds image-spec string ("pil", "torchrgb",
     * "l8", ... — the strings the reference validates against
-    * `wds.autodecode.imagespecs`, sdata/dataset.py:204-232), backed by
-    * [[graft.functions.ImageCodec]].
+    * `wds.autodecode.imagespecs`, sdata/dataset.py:204-232): one native
+    * Catalyst expression, [[graft.functions.ImageDecode]], over the
+    * [[graft.functions.ImageCodec]] kernel, planned inside whole-stage
+    * codegen with the rest of the decode projection.
     */
   def image(spec: String): Decoder =
     Decoder(s"image_$spec", graft.functions.ImageCodec.decodeUdf(spec))
