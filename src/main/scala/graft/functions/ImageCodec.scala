@@ -156,22 +156,28 @@ object ImageCodec {
 
   /** 0x__RRGGBB of source pixel (xs(i), ys(j)) at j·xs.length + i. The
     * sRGB 8-bit interleaved types read the data buffer in bulk, bit-exact
-    * with `getRGB`; 8-bit gray keeps its stored sample as r = g = b, as
-    * PIL does, where `getRGB` applies Java's linear-gray→sRGB curve.
-    * Other types use `getRGB`. */
+    * with `getRGB`; 8-bit gray, with or without an alpha band, keeps its
+    * stored gray sample as r = g = b and drops alpha, as PIL's L and LA
+    * conversions do, where `getRGB` applies Java's linear-gray→sRGB
+    * curve. Other types use `getRGB`. */
   private[graft] def packedRgb(img: BufferedImage, xs: Array[Int], ys: Array[Int]): Array[Int] = {
     import BufferedImage._
     val nw = xs.length
     val out = new Array[Int](Math.multiplyExact(nw, ys.length))
     val raster = img.getRaster
     val tx = raster.getSampleModelTranslateX; val ty = raster.getSampleModelTranslateY
-    val srgb = img.getColorModel.getColorSpace.isCS_sRGB
+    val cm = img.getColorModel
+    val srgb = cm.getColorSpace.isCS_sRGB
+    // the PNG reader's 8-bit gray+alpha is a TYPE_CUSTOM gray, alpha pair
+    val grayAlpha = img.getType == TYPE_CUSTOM && cm.hasAlpha && cm.getNumColorComponents == 1 &&
+      cm.getColorSpace.getType == java.awt.color.ColorSpace.TYPE_GRAY
     (img.getType, raster.getSampleModel, raster.getDataBuffer) match {
       case (t, sm: PixelInterleavedSampleModel, db: DataBufferByte)
-          if t == TYPE_BYTE_GRAY || (srgb && (t == TYPE_3BYTE_BGR || t == TYPE_4BYTE_ABGR)) =>
+          if t == TYPE_BYTE_GRAY || (grayAlpha && sm.getNumBands == 2) ||
+            (srgb && (t == TYPE_3BYTE_BGR || t == TYPE_4BYTE_ABGR)) =>
         val d = db.getData; val ps = sm.getPixelStride; val ss = sm.getScanlineStride
         val bands = sm.getBandOffsets
-        val (ro, go, bo) = if (t == TYPE_BYTE_GRAY) (bands(0), bands(0), bands(0))
+        val (ro, go, bo) = if (sm.getNumBands < 3) (bands(0), bands(0), bands(0))
           else (bands(0), bands(1), bands(2))
         var j = 0
         while (j < ys.length) {

@@ -34,17 +34,22 @@ object ShardListing {
     expanded.filter(ShardExpand.tarFilter).filter(sampler)
   }
 
+  /** Every file under `url`, nested directories included, sorted. A
+    * `listStatus` walk, not `listFiles`: the `LocatedFileStatus` that
+    * `listFiles` builds reads each file's permission, which without
+    * libhadoop runs `ls -ld` as a child process per shard.
+    */
   private def listDir(spark: SparkSession, url: String): Seq[String] = {
     val path = new Path(url)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.getFileStatus(path).isFile) Seq(url)
     else {
-      val it = fs.listFiles(path, /* recursive = */ true)
       val buf = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile) buf += st.getPath.toString
+      def walk(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.isFile) buf += st.getPath.toString
       }
+      walk(path)
       buf.toSeq.sorted
     }
   }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -557,8 +558,8 @@ class SnapshotMicroBatchStream(requiredSchema: StructType,
       if (phys.isEmpty) requiredSchema
       else StructType(requiredSchema.fields.map(f =>
         phys.get(f.name).map(p => f.copy(name = p)).getOrElse(f)))
-    SnapshotReaderFactory(readerSchema,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    SnapshotReaderFactory(readerSchema, spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf())))
   }
 
   override def commit(end: Offset): Unit = ()
@@ -582,11 +583,14 @@ object SnapshotOffset {
 
 case class SnapshotInputPartition(file: String) extends InputPartition
 
+/** Per-task reader factory; the Hadoop conf rides in one broadcast per
+  * micro-batch scan rather than inline in every task.
+  */
 case class SnapshotReaderFactory(schema: StructType,
-    conf: SerializableConfiguration) extends PartitionReaderFactory {
+    confBc: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new SnapshotPartitionReader(
-      p.asInstanceOf[SnapshotInputPartition].file, schema, conf.value)
+      p.asInstanceOf[SnapshotInputPartition].file, schema, confBc.value.value)
 }
 
 /** Row-group reader for one immutable snapshot data file. The requested

@@ -5,7 +5,6 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.ShardListing
 
@@ -81,13 +80,10 @@ class WdsTarMicroBatchStream(schema: StructType, declaredExts: Set[String],
       .map(s => WdsTarInputPartition(Seq(s)): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    WdsTarReaderFactory(schema, declaredExts, conf,
+  override def createReaderFactory(): PartitionReaderFactory =
+    WdsTarReaderFactory(schema, declaredExts, WdsTarSource.broadcastConf(),
       skipErrors = "skip".equalsIgnoreCase(options.getOrDefault("errorPolicy", "fail")),
       keyFilters = pushed.filter(ShardFilters.supported(_, WdsTarSource.KeyCol)).toSeq)
-  }
 
   override def commit(end: Offset): Unit = ()
 

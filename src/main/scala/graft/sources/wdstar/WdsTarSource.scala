@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveInputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -92,6 +93,15 @@ object WdsTarSource {
   val KeyCol = "__key__"
   val UrlCol = "__url__"
   val OverflowCol = "__overflow__"
+
+  /** The active session's Hadoop conf as a broadcast, made once per scan
+    * or write, as Spark's own file sources ship it.
+    */
+  def broadcastConf(): Broadcast[SerializableConfiguration] = {
+    val spark = SparkSession.active
+    spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+  }
 
   def extensionsOf(options: CaseInsensitiveStringMap): Option[Seq[String]] = {
     val exts = options.get("extensions")
@@ -346,14 +356,11 @@ class WdsTarScan(requiredSchema: StructType, fullSchema: StructType,
       .toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    WdsTarReaderFactory(requiredSchema, declaredExts, conf,
+  override def createReaderFactory(): PartitionReaderFactory =
+    WdsTarReaderFactory(requiredSchema, declaredExts, WdsTarSource.broadcastConf(),
       skipErrors = "skip".equalsIgnoreCase(options.getOrDefault("errorPolicy", "fail")),
       keyFilters = keyFilters.toSeq,
       useIndex = !"false".equalsIgnoreCase(options.getOrDefault("index", "true")))
-  }
 }
 
 /** One scan partition: a group of shards (singleton unless packed), plus
@@ -363,13 +370,18 @@ class WdsTarScan(requiredSchema: StructType, fullSchema: StructType,
 case class WdsTarInputPartition(shardPaths: Seq[String],
     metas: Seq[Map[String, String]] = Nil) extends InputPartition
 
+/** Per-task reader factory. The Hadoop conf rides in a broadcast made
+  * once per scan: inline, every job's task binary would re-serialize the
+  * whole `Configuration` and every task would re-parse it.
+  */
 case class WdsTarReaderFactory(readSchema: StructType, declaredExts: Set[String],
-    conf: SerializableConfiguration, skipErrors: Boolean,
+    confBc: Broadcast[SerializableConfiguration], skipErrors: Boolean,
     keyFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
     useIndex: Boolean = true)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[WdsTarInputPartition]
+    val conf = confBc.value.value
     def mk(i: Int): PartitionReader[InternalRow] = {
       val metas = if (p.metas.isEmpty) Map.empty[String, String] else p.metas(i)
       if (metas.isEmpty) {
@@ -379,17 +391,17 @@ case class WdsTarReaderFactory(readSchema: StructType, declaredExts: Set[String]
         // predicates were actually pushed)
         val indexed = useIndex && keyFilters.nonEmpty && {
           val idx = new Path(WdsTarIndex.indexPath(p.shardPaths(i)))
-          idx.getFileSystem(conf.value).exists(idx)
+          idx.getFileSystem(conf).exists(idx)
         }
         if (indexed)
           new WdsTarIndexedReader(p.shardPaths(i), readSchema, declaredExts,
-            conf.value, skipErrors, keyFilters)
+            conf, skipErrors, keyFilters)
         else
           new WdsTarPartitionReader(p.shardPaths(i), readSchema, declaredExts,
-            conf.value, skipErrors, keyFilters)
+            conf, skipErrors, keyFilters)
       } else
         new WdsTarZipReader(p.shardPaths(i), metas, readSchema, declaredExts,
-          conf.value, skipErrors, keyFilters)
+          conf, skipErrors, keyFilters)
     }
     if (p.shardPaths.lengthCompare(1) == 0) mk(0)
     else new WdsTarChainedReader(p.shardPaths.indices.map(i => () => mk(i)))

@@ -2,7 +2,7 @@ package graft.sources.wdstar
 
 import org.apache.commons.compress.archivers.tar.{TarArchiveEntry, TarArchiveOutputStream}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{BinaryType, StringType, StructType}
@@ -71,16 +71,15 @@ class WdsTarWriteBuilder(schema: StructType, options: java.util.Map[String, Stri
   }
 
   override def build(): Write = new Write {
-    private def prepared: (String, SerializableConfiguration) = {
+    private def prepared: (String, Broadcast[SerializableConfiguration]) = {
       val dir = options.get("path")
       require(dir != null, "wds-tar write requires the 'path' option")
-      val conf = new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf())
+      val confBc = WdsTarSource.broadcastConf()
       if (doTruncate) {
         (dir +: metaSuffixes.map(graft.sources.ShardListing.metaDir(dir, _)))
           .foreach { d =>
             val p = new Path(d)
-            val fs = p.getFileSystem(conf.value)
+            val fs = p.getFileSystem(confBc.value.value)
             if (fs.exists(p)) {
               fs.listStatus(p).filter { st =>
                 val n = st.getPath.getName
@@ -89,32 +88,32 @@ class WdsTarWriteBuilder(schema: StructType, options: java.util.Map[String, Stri
             }
           }
       }
-      (dir, conf)
+      (dir, confBc)
     }
 
     override def toBatch: BatchWrite = {
-      val (dir, conf) = prepared
-      new WdsTarBatchWrite(dir, schema, conf, metaSuffixes, writeIndex,
+      val (dir, confBc) = prepared
+      new WdsTarBatchWrite(dir, schema, confBc, metaSuffixes, writeIndex,
         maxSamples, maxBytes)
     }
 
     override def toStreaming
         : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-      val (dir, conf) = prepared
-      new WdsTarStreamingWrite(dir, schema, conf, metaSuffixes, writeIndex,
+      val (dir, confBc) = prepared
+      new WdsTarStreamingWrite(dir, schema, confBc, metaSuffixes, writeIndex,
         maxSamples, maxBytes)
     }
   }
 }
 
 class WdsTarBatchWrite(dir: String, schema: StructType,
-    conf: SerializableConfiguration, metaSuffixes: Seq[String] = Nil,
+    confBc: Broadcast[SerializableConfiguration], metaSuffixes: Seq[String] = Nil,
     writeIndex: Boolean = false, maxSamples: Long = Long.MaxValue,
     maxBytes: Long = Long.MaxValue)
     extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    WdsTarWriterFactory(dir, schema, conf, metaSuffixes, writeIndex,
+    WdsTarWriterFactory(dir, schema, confBc, metaSuffixes, writeIndex,
       maxSamples, maxBytes)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
@@ -122,13 +121,16 @@ class WdsTarBatchWrite(dir: String, schema: StructType,
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
+/** Per-task writer factory; the Hadoop conf rides in the write's one
+  * broadcast (see [[WdsTarReaderFactory]]).
+  */
 case class WdsTarWriterFactory(dir: String, schema: StructType,
-    conf: SerializableConfiguration, metaSuffixes: Seq[String] = Nil,
+    confBc: Broadcast[SerializableConfiguration], metaSuffixes: Seq[String] = Nil,
     writeIndex: Boolean = false, maxSamples: Long = Long.MaxValue,
     maxBytes: Long = Long.MaxValue)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new WdsTarDataWriter(dir, schema, conf, metaSuffixes,
+    new WdsTarDataWriter(dir, schema, confBc.value, metaSuffixes,
       f"shard-$partitionId%05d-$taskId.tar",
       f".shard-$partitionId%05d-$taskId.tar.inprogress",
       overwriteFinal = false, writeIndex = writeIndex,
@@ -348,14 +350,14 @@ class WdsTarDataWriter(dir: String, schema: StructType,
   * atomic unit), abort is best-effort, matching the batch sink.
   */
 class WdsTarStreamingWrite(dir: String, schema: StructType,
-    conf: SerializableConfiguration, metaSuffixes: Seq[String] = Nil,
+    confBc: Broadcast[SerializableConfiguration], metaSuffixes: Seq[String] = Nil,
     writeIndex: Boolean = false, maxSamples: Long = Long.MaxValue,
     maxBytes: Long = Long.MaxValue)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    WdsTarStreamingWriterFactory(dir, schema, conf, metaSuffixes, writeIndex,
+    WdsTarStreamingWriterFactory(dir, schema, confBc, metaSuffixes, writeIndex,
       maxSamples, maxBytes)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
@@ -363,13 +365,13 @@ class WdsTarStreamingWrite(dir: String, schema: StructType,
 }
 
 case class WdsTarStreamingWriterFactory(dir: String, schema: StructType,
-    conf: SerializableConfiguration, metaSuffixes: Seq[String] = Nil,
+    confBc: Broadcast[SerializableConfiguration], metaSuffixes: Seq[String] = Nil,
     writeIndex: Boolean = false, maxSamples: Long = Long.MaxValue,
     maxBytes: Long = Long.MaxValue)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
-    new WdsTarDataWriter(dir, schema, conf, metaSuffixes,
+    new WdsTarDataWriter(dir, schema, confBc.value, metaSuffixes,
       shardName = f"shard-e$epochId%06d-p$partitionId%05d.tar",
       tmpName = f".shard-e$epochId%06d-p$partitionId%05d-$taskId.tar.inprogress",
       overwriteFinal = true, writeIndex = writeIndex,

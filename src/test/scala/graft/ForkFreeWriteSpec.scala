@@ -38,26 +38,11 @@ class ForkFreeWriteSpec extends AnyFunSuite {
     finally s.close()
   }
 
-  /** Commands of the processes the JVM started while `body` ran. */
-  private def processStarts(body: => Unit): Seq[String] = {
-    val rec = new jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart")
-    rec.start()
-    try body finally rec.stop()
-    val out = Files.createTempFile("process-starts", ".jfr")
-    try {
-      rec.dump(out)
-      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
-        .filter(_.getEventType.getName == "jdk.ProcessStart")
-        .map(_.getString("command"))
-    } finally { rec.close(); Files.deleteIfExists(out) }
-  }
-
   test("commit, UPDATE, DELETE, MERGE and INSERT on a local table start no chmod process") {
     import spark.implicits._
     val t = dir("fork-free-dml")
     val control = dir("fork-free-control")
-    val commands = processStarts {
+    val (_, commands) = ProcessStarts.during {
       SnapshotLog.commit((0L until 400L).map(k => (k, k % 7)).toDF("k", "qty")
         .repartition(2), t, "append", Seq("k"))
       GraftSql.registerSnapshot(spark, "ffw_v", t, None, Seq("k"))

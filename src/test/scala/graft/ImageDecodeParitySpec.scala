@@ -201,6 +201,36 @@ class ImageDecodeParitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(torchl.pixels == samples.map(_ / 255.0f))
   }
 
+  test("8-bit gray+alpha PNGs decode to their stored gray samples, alpha dropped, as PIL does") {
+    import java.awt.image.{ComponentColorModel, DataBuffer}
+    val rng = new Random(13)
+    val cm = new ComponentColorModel(
+      java.awt.color.ColorSpace.getInstance(java.awt.color.ColorSpace.CS_GRAY),
+      true, false, java.awt.Transparency.TRANSLUCENT, DataBuffer.TYPE_BYTE)
+    for ((w, h) <- sizes) {
+      val img = new BufferedImage(cm, cm.createCompatibleWritableRaster(w, h), false, null)
+      for (y <- 0 until h; x <- 0 until w) {
+        img.getRaster.setSample(x, y, 0, rng.nextInt(256))
+        img.getRaster.setSample(x, y, 1, rng.nextInt(256))
+      }
+      val png = encode(img, "png")
+      val read = javax.imageio.ImageIO.read(new ByteArrayInputStream(png))
+      assert(read.getType == BufferedImage.TYPE_CUSTOM && read.getRaster.getNumBands == 2)
+      def gray(im: BufferedImage) =
+        for (y <- 0 until h; x <- 0 until w) yield im.getRaster.getSample(x, y, 0).toFloat
+      val stored = gray(read)
+      assert(stored == gray(img))
+      val l8 = ImageCodec.decodeAs("l8", png).get
+      assert(l8.channels == 1 && l8.pixels == stored, s"l8 ${w}x$h")
+      val pil = ImageCodec.decodeAs("pil", png).get
+      assert(pil.channels == 3 && pil.pixels == stored.flatMap(v => Seq(v, v, v)), s"pil ${w}x$h")
+      assert(ImageCodec.decodeAs("torchl", png).get.pixels == stored.map(_ / 255.0f),
+        s"torchl ${w}x$h")
+      // getRGB maps the stored samples through Java's linear-gray→sRGB curve
+      if (stored.exists(v => v > 0 && v < 255)) assert(reference("l8", png).get._4 != stored)
+    }
+  }
+
   test("8-bit grayscale JPEGs decode to their stored samples too") {
     val rng = new Random(5)
     val img = new BufferedImage(9, 5, BufferedImage.TYPE_BYTE_GRAY)
