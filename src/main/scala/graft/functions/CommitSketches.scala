@@ -8,12 +8,11 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** Commit-time sketch aggregates — the single-pass replacement for the
-  * snapshot commit's per-column bloom/KMV jobs: ONE `groupBy(file)`
-  * aggregation over the freshly written frame carries every requested
-  * bloom and KMV column at once, partial aggregation does the work
-  * map-side, and the shuffle moves one sketch row per (file), never
-  * the data or its distinct hash set.
+/** Commit-time sketch aggregates. A snapshot write's tasks call their
+  * `update` per written row (`graft.sources.snapshot.ParquetWrite`), so
+  * every requested bloom and KMV column of a commit costs no pass of
+  * its own; the column forms in [[CommitSketches]] aggregate the same
+  * sketches over any frame, one row per group.
   *
   * Bit-twins of the Column-expression paths they replace (pinned by
   * CommitSketchSpec):

@@ -4361,8 +4361,8 @@ object SourceQueries extends QueryPack {
     }),
 
     // Per-file null counts as a pruning stat (Delta's nullCount): the
-    // manifest records exact per-column null counts from the parquet
-    // footers, and IS NULL / IS NOT NULL predicates skip files the
+    // manifest records exact per-column null counts from the write
+    // tasks, and IS NULL / IS NOT NULL predicates skip files the
     // [min,max] window cannot speak for (min/max describe only non-null
     // values). The all-null file is provably invisible to IS NOT NULL,
     // the fully-populated file to IS NULL, and the mixed file serves

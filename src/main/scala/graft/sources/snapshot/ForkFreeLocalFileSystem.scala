@@ -9,14 +9,13 @@ import org.apache.hadoop.fs.permission.FsPermission
 /** Hadoop's checksummed local FileSystem whose permission calls start no
   * process. Without libhadoop, the stock `RawLocalFileSystem.setPermission`
   * runs `chmod` as a child process, and a Hadoop `create` or `mkdirs`
-  * calls it for every file and directory it makes: about a dozen
-  * processes per snapshot commit (job and task directories, the part
-  * file, `.crc` sidecars, `_SUCCESS`, the temp manifest), each costing
-  * milliseconds. This class sets the same mode bits through `java.nio`,
-  * so a write lands the same files, names, `.crc` sidecars and POSIX
-  * modes as through the stock `LocalFileSystem`. The sticky bit, which
-  * java.nio cannot set, and platforms without POSIX attributes keep the
-  * stock call.
+  * calls it for every file and directory it makes: several processes
+  * per snapshot commit (the attempt directory, the part file and its
+  * `.crc` sidecar, the temp manifest), each costing milliseconds. This
+  * class sets the same mode bits through `java.nio`, so a write lands the
+  * same files, names, `.crc` sidecars and POSIX modes as through the
+  * stock `LocalFileSystem`. The sticky bit, which java.nio cannot set,
+  * and platforms without POSIX attributes keep the stock call.
   */
 class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSystem)
 
@@ -78,12 +77,12 @@ object ForkFreeLocalFileSystem {
     }
   }
 
-  /** Hadoop options that make a Spark write job, committer and tasks
-    * alike, open `file:` paths through [[ForkFreeLocalFileSystem]] when
-    * `fs` is one; empty for any other FileSystem. The FileSystem cache is
-    * keyed by scheme and user, not by configuration, so the job turns it
-    * off for that scheme: it would otherwise return a cached stock
-    * instance.
+  /** Hadoop options that make a write's tasks open `file:` paths through
+    * [[ForkFreeLocalFileSystem]] when `fs` is one ([[ParquetWrite]] builds
+    * its conf with them); empty for any other FileSystem. The FileSystem
+    * cache is keyed by scheme and user, not by configuration, so the
+    * write turns it off for that scheme: it would otherwise return a
+    * cached stock instance.
     */
   def writeOptions(fs: FileSystem): Map[String, String] = fs match {
     case _: ForkFreeLocalFileSystem => Map(

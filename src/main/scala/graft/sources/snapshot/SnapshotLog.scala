@@ -54,20 +54,20 @@ object SnapshotLog {
     * beyond what ranges can express, and an optional deletion vector
     * ([[DvRef]]) masking rows without rewriting the file
     * (merge-on-read — see [[deleteWhereDV]]).
-    */
-  /** `ndvs` holds an optional per-column KMV distinct sketch (base64 of
+    *
+    * `ndvs` holds an optional per-column KMV distinct sketch (base64 of
     * the ≤[[NdvK]] smallest distinct portable hashes of the column's
     * string form) — mergeable across files by construction (the k
     * smallest of a union = the k smallest of the per-file k-smallest
     * sets), which is what makes [[tableStats]]'s approximate NDV a
     * metadata-only answer.
-    */
-  /** `nulls` holds exact per-column null counts (absent = unknown) —
+    *
+    * `nulls` holds exact per-column null counts (absent = unknown) —
     * the stat that lets IS NULL / IS NOT NULL predicates skip files
     * the [min,max] window can't speak for (min/max describe only the
     * non-null values).
-    */
-  /** `seq` is the file's DATA SEQUENCE NUMBER (the Iceberg v2
+    *
+    * `seq` is the file's DATA SEQUENCE NUMBER (the Iceberg v2
     * concept): a monotone logical clock stamped at commit, independent
     * of version numbering (branches share the parent's clock).
     * Equality deletes apply to a file iff the delete's seq is STRICTLY
@@ -95,30 +95,6 @@ object SnapshotLog {
   private def liveRows(f: FileEntry): Long =
     f.rows - f.dv.map(_.rows).getOrElse(0L)
 
-  /** `epoch` carries a streaming writer's batch id for exactly-once
-    * replay detection ([[appendStreamBatch]]); -1 for batch commits.
-    */
-  /** `ts` is the publish wall-clock (epoch millis), stamped by
-    * [[publish]] — the basis for age-based retention
-    * ([[expireOlderThan]]). Monotone non-strict along the version
-    * chain (commits are serialized by the rename CAS).
-    */
-  /** `physical` is the column-mapping table (Delta's name-mode core):
-    * logical column name → the PHYSICAL name the parquet files carry —
-    * a column's name at first write, fixed for life. Identity entries
-    * are omitted, so an never-renamed table has an empty map and the
-    * fast read path. [[renameColumn]] changes only the logical side
-    * (one manifest write, zero data movement); reads alias physical →
-    * logical over the scan; writes alias logical → physical before
-    * landing files, so every data file is layout-uniform regardless of
-    * which rename era wrote it. Manifest stats/blooms/ndvs/nulls stay
-    * keyed by LOGICAL name (re-keyed at rename), so all pruning paths
-    * are rename-oblivious.
-    */
-  /** `eqDeletes` carries the outstanding equality-delete set (see
-    * [[EqDelete]]); empty for tables that never MOR-upsert — every
-    * read path then takes its pre-existing plan unchanged.
-    */
   /** Declared clustering layout — the Iceberg partition-spec idea
     * reduced to its engine-visible core: HOW a conforming write
     * organizes its files, recorded as a TABLE PROPERTY in the manifest
@@ -144,6 +120,29 @@ object SnapshotLog {
     */
   final case class LayoutSpec(kind: String, cols: Seq[String], n: Int)
 
+  /** One version of the table. `epoch` carries a streaming writer's
+    * batch id for exactly-once replay detection ([[appendStreamBatch]]);
+    * -1 for batch commits. `ts` is the publish wall-clock (epoch
+    * millis), stamped by [[publish]] — the basis for age-based retention
+    * ([[expireOlderThan]]). Monotone non-strict along the version chain
+    * (commits are serialized by the rename CAS).
+    *
+    * `physical` is the column-mapping table (Delta's name-mode core):
+    * logical column name → the PHYSICAL name the parquet files carry —
+    * a column's name at first write, fixed for life. Identity entries
+    * are omitted, so an never-renamed table has an empty map and the
+    * fast read path. [[renameColumn]] changes only the logical side
+    * (one manifest write, zero data movement); reads alias physical →
+    * logical over the scan; writes alias logical → physical before
+    * landing files, so every data file is layout-uniform regardless of
+    * which rename era wrote it. Manifest stats/blooms/ndvs/nulls stay
+    * keyed by LOGICAL name (re-keyed at rename), so all pruning paths
+    * are rename-oblivious.
+    *
+    * `eqDeletes` carries the outstanding equality-delete set (see
+    * [[EqDelete]]); empty for tables that never MOR-upsert — every
+    * read path then takes its pre-existing plan unchanged.
+    */
   final case class Manifest(version: Long, parent: Long, op: String,
       schemaDdl: String, files: Seq[FileEntry], epoch: Long = -1L,
       ts: Long = 0L, physical: Map[String, String] = Map.empty,
@@ -218,18 +217,11 @@ object SnapshotLog {
     * ([[ForkFreeLocalFileSystem]]): its creates and directory makes set
     * their POSIX modes through java.nio instead of a `chmod` process per
     * file, so manifest publishes (the LogStore's temp writes) and
-    * [[writeData]]'s commit start no process. Every other scheme gets
-    * the FileSystem Hadoop resolves.
+    * [[writeData]]'s write tasks start no process. Every other scheme
+    * gets the FileSystem Hadoop resolves.
     */
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     ForkFreeLocalFileSystem.of(p, spark.sparkContext.hadoopConfiguration)
-
-  /** `df.write` for files under a table on `fs`: on a `file:` table the
-    * write job's committer and tasks use the same fork-free FileSystem
-    * as [[fsOf]] (see [[ForkFreeLocalFileSystem.writeOptions]]).
-    */
-  private def writerFor(df: DataFrame, fs: FileSystem) =
-    df.write.options(ForkFreeLocalFileSystem.writeOptions(fs))
 
   /** Highest committed version, from a listing of the (small) log dir
     * only. `.tmp-*` leftovers from crashed commits are ignored.
@@ -248,14 +240,13 @@ object SnapshotLog {
 
   /** Commit `df` as the next version. `mode` is "append" (new files join
     * the parent's) or "overwrite" (new files replace them). Per-file
-    * stats for `statsCols` are gathered with one Spark pass over the
-    * NEWLY WRITTEN files only (at production scale you'd harvest them
-    * from the parquet footers the write already produced; the extra scan
-    * here is over the new data only, never the table). `bloomCols` adds
-    * per-file Bloom filters for point-lookup skipping ([[readPoint]]).
-    * Returns the new version.
-    */
-  /** `declareLayout` declares a clustering layout IN THE SAME commit
+    * stats for `statsCols`, Bloom filters for `bloomCols` (point-lookup
+    * skipping, [[readPoint]]) and KMV sketches for `ndvCols` come from
+    * the write tasks themselves ([[writeData]]): the commit is one Spark
+    * job and a manifest publish, with no pass over the new files after
+    * it. Returns the new version.
+    *
+    * `declareLayout` declares a clustering layout IN THE SAME commit
     * as the data — schema, layout, and files publish atomically (the
     * CTAS .. CLUSTER BY shape: no transient window where the table is
     * empty or layout-less, no partial state on a crash between
@@ -476,9 +467,9 @@ object SnapshotLog {
     * its input has partitions — measured 32-34 files of ~15 KB per MERGE
     * commit on the sf0.1 gates when batch-side frames kept the shuffle
     * partitioning. That small-file debt compounds into every later
-    * scan, candidacy probe, manifest and footer harvest (guide §6: aim
-    * for advisory-sized output files). What sizes the output depends on
-    * the input ([[RewriteInput]]):
+    * scan, candidacy probe and manifest (guide §6: aim for
+    * advisory-sized output files). What sizes the output depends on the
+    * input ([[RewriteInput]]):
     *
     *  - [[Scanned]]: a narrow `coalesce(ceil(touched bytes / advisory
     *    partition size))`, the bytes taken from the manifest. A tiny
@@ -578,8 +569,8 @@ object SnapshotLog {
     * probe is its JVM bit-twin.
     */
   val DefaultBloomBits = 4096
-  private val BloomK = 3
-  private val BloomSeedBase = 7001
+  private[snapshot] val BloomK = 3
+  private[snapshot] val BloomSeedBase = 7001
 
   private[snapshot] def bloomMightContain(words: Array[Long], value: String): Boolean = {
     val bits = words.length * 64
@@ -590,37 +581,25 @@ object SnapshotLog {
     }
   }
 
-  private def bloomB64(words: Array[Long]): String = {
-    val bb = java.nio.ByteBuffer.allocate(words.length * 8)
-    words.foreach(bb.putLong)
-    java.util.Base64.getEncoder.encodeToString(bb.array())
-  }
-
   private[snapshot] def bloomDecode(b64: String): Array[Long] = {
     val bb = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(b64))
     Array.fill(bb.remaining() / 8)(bb.getLong())
   }
 
-  /** Land `df` as immutable files for version-attempt `v` and return
-    * their manifest entries. Row counts and column [min,max] harvest
-    * from the parquet FOOTERS the write just produced whenever every
-    * stats column is a plain numeric — a commit then costs zero extra
-    * Spark jobs, just a driver-side footer read per NEW file. Columns
-    * the footer can't vouch for (strings — writers may truncate binary
-    * stats, and these stats are load-bearing for file classification)
-    * fall back to one Spark pass over the new files only. Blooms, when
-    * requested, are one more pass over the new files. On a `file:`
-    * table the write job (committer and tasks) runs on the same
-    * fork-free FileSystem as [[fsOf]]: the attempt directory, part
-    * files, `.crc` sidecars and `_SUCCESS` land as through Hadoop's
-    * local FileSystem, with no `chmod` process per file.
-    */
   /** KMV sketch size: 64 smallest distinct 32-bit hashes per
     * (file, column) — ~512 bytes of manifest per sketch, relative
     * error ~1/√(k-1) ≈ 13%.
     */
   val NdvK = 64
 
+  /** Land `df` as immutable files for version-attempt `v` and return
+    * their manifest entries, in ONE Spark job and nothing after it
+    * ([[ParquetWrite]]): each write task returns its files' row counts,
+    * lengths, min/max and null counts for `statsCols` (Spark's ordering,
+    * every column type), and the bloom and KMV sketches for `bloomCols`
+    * and `ndvCols`. Zero-row files get no entry. On a `file:` table the
+    * tasks write through the same fork-free FileSystem as [[fsOf]].
+    */
   private def writeData(df: DataFrame, table: String, v: Long,
       statsCols: Seq[String], bloomCols: Seq[String] = Nil,
       bloomBits: Int = DefaultBloomBits, ndvCols: Seq[String] = Nil,
@@ -637,205 +616,21 @@ object SnapshotLog {
     // CHECK constraints enforce HERE, on the rows actually written —
     // every row-adding path funnels through this write, and a violation
     // aborts before any manifest publishes (the partial attempt dir is
-    // vacuumable garbage, same as a lost commit race). Constraints see
-    // LOGICAL names; files land under PHYSICAL names (column mapping) —
-    // the guard binds before the rename projection.
+    // deleted). Constraints see LOGICAL names; files land under
+    // PHYSICAL names (column mapping), entries stay keyed by logical
+    // ones — the guard binds before the rename projection.
     preProbeConstraints(df, table)
     val landed =
       if (physical.isEmpty) constraintGuard(df, table)
       else constraintGuard(df, table).select(df.columns.map(c =>
         col(c).as(physical.getOrElse(c, c))).toIndexedSeq: _*)
-    // stats/bloom/ndv collection runs over the files as written, so
-    // the requested LOGICAL columns translate to physical here and the
-    // finished entries re-key back — callers and pruning never see a
-    // physical name
-    val toPhys = (c: String) => physical.getOrElse(c, c)
-    val toLogical: Map[String, String] =
-      (statsCols ++ bloomCols ++ ndvCols).map(c => toPhys(c) -> c).toMap
-    val statsColsP = statsCols.map(toPhys)
-    val bloomColsP = bloomCols.map(toPhys)
-    val ndvColsP = ndvCols.map(toPhys)
-    try writerFor(landed, fs).mode("overwrite").parquet(dataDir.toString)
+    try ParquetWrite.write(landed, tbl, dataRel, fs, statsCols, bloomCols, bloomBits,
+      ndvCols, column = c => physical.getOrElse(c, c))
     catch {
       case ex: Throwable =>
         try fs.delete(dataDir, true) catch { case _: Exception => () }
         rethrowConstraint(ex)
     }
-
-    // (file, column) -> bloom bitmap AND (file, column) -> KMV sketch
-    // in ONE aggregation pass over the written frame: every requested
-    // column rides its own TypedImperativeAggregate (bloom words /
-    // bounded k-smallest-distinct-hashes — bit-twins of the expression
-    // paths they replaced, pinned by CommitSketchSpec), partial
-    // aggregation runs map-side, and the one shuffle moves a sketch
-    // row per FILE — never the data, and never the distinct hash set
-    // the old per-column window shuffled. Collect is bounded by
-    // files × (words + k).
-    val (blooms, ndvs): (Map[(String, String), Array[Long]],
-        Map[(String, String), Array[Long]]) =
-      if (bloomColsP.isEmpty && ndvColsP.isEmpty) (Map.empty, Map.empty)
-      else {
-        val sketches: Seq[org.apache.spark.sql.Column] =
-          bloomColsP.map(c => graft.functions.CommitSketches
-            .bloomWords(col(c), bloomBits, BloomSeedBase, BloomK)) ++
-            ndvColsP.map(c => graft.functions.CommitSketches.kmv(col(c), NdvK))
-        val rows = spark.read.parquet(dataDir.toString)
-          .groupBy(input_file_name().as("__file"))
-          .agg(sketches.head, sketches.tail: _*)
-          .collect()
-        def short(f: String) = f.substring(f.lastIndexOf('/') + 1)
-        val b = rows.flatMap { r =>
-          bloomColsP.zipWithIndex.flatMap { case (c, i) =>
-            val words = r.getSeq[Long](1 + i).toArray
-            // a file with zero non-null values gets NO bloom entry
-            // (parity with the old non-null-filtered path)
-            if (words.exists(_ != 0L)) Some((short(r.getString(0)), c) -> words)
-            else None
-          }
-        }.toMap
-        val n = rows.flatMap { r =>
-          ndvColsP.zipWithIndex.flatMap { case (c, i) =>
-            val ks = r.getSeq[Long](1 + bloomColsP.size + i).toArray
-            if (ks.nonEmpty) Some((short(r.getString(0)), c) -> ks) else None
-          }
-        }.toMap
-        (b, n)
-      }
-
-    val entries = footerEntries(spark, fs, dataDir, dataRel, statsColsP)
-      .getOrElse(scanEntries(spark, dataDir, dataRel, statsColsP))
-    def rekey[A](m: Map[String, A]): Map[String, A] =
-      if (physical.isEmpty) m
-      else m.map { case (c, v) => toLogical.getOrElse(c, c) -> v }
-    entries
-      .map { e =>
-        val name = e.path.substring(e.path.lastIndexOf('/') + 1)
-        val fileBlooms = bloomColsP.flatMap(c =>
-          blooms.get((name, c)).map(w =>
-            toLogical.getOrElse(c, c) -> bloomB64(w))).toMap
-        val fileNdvs = ndvColsP.flatMap(c =>
-          ndvs.get((name, c)).map(w =>
-            toLogical.getOrElse(c, c) -> bloomB64(w))).toMap
-        val bytes = fs.getFileStatus(new Path(dataDir, name)).getLen
-        e.copy(bytes = bytes, blooms = fileBlooms, ndvs = fileNdvs,
-          stats = rekey(e.stats), nulls = rekey(e.nulls))
-      }.sortBy(_.path)
-  }
-
-  /** Footer-based stats harvest (the production commit path): exact by
-    * the parquet format contract for plain numeric physical types —
-    * INT32/INT64 with int-or-no logical annotation, FLOAT, DOUBLE.
-    * Int/float widen to long/double, which is exactly what the
-    * manifest JSON round-trip produces anyway. Returns None (use the
-    * Spark fallback) when any stats column is another type, is missing
-    * from a footer, or carries unusable statistics. Zero-row part
-    * files are excluded to match the scan path (Spark writes none).
-    */
-  private def footerEntries(spark: SparkSession,
-      fs: FileSystem, dataDir: Path, dataRel: String,
-      statsCols: Seq[String]): Option[Seq[FileEntry]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = spark.sparkContext.hadoopConfiguration
-    val parts = fs.listStatus(dataDir).filter(st => st.isFile && {
-      val n = st.getPath.getName
-      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    })
-    try {
-      Some(parts.toSeq.map { st =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(st.getPath, conf))
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala.toSeq
-          val rows = blocks.map(_.getRowCount).sum
-          val stats = statsCols.flatMap { c =>
-            val chunks = blocks.map(b =>
-              b.getColumns.asScala.find(_.getPath.toDotString == c)
-                .getOrElse(throw FooterFallback))
-            chunks.headOption.foreach { ch =>
-              val pt = ch.getPrimitiveType
-              val ok = pt.getPrimitiveTypeName match {
-                case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64 =>
-                  pt.getLogicalTypeAnnotation == null ||
-                    pt.getLogicalTypeAnnotation
-                      .isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation]
-                case PrimitiveTypeName.FLOAT | PrimitiveTypeName.DOUBLE =>
-                  pt.getLogicalTypeAnnotation == null
-                case _ => false
-              }
-              if (!ok) throw FooterFallback
-            }
-            def widen(x: Any): Any = x match {
-              case n: java.lang.Integer => n.longValue()
-              case n: java.lang.Long => n.longValue()
-              case n: java.lang.Float => n.doubleValue()
-              case n: java.lang.Double => n.doubleValue()
-              case _ => throw FooterFallback
-            }
-            val present = chunks.filter { ch =>
-              val s = ch.getStatistics
-              if (s == null) throw FooterFallback
-              if (s.hasNonNullValue) true
-              // no non-null value is only trustworthy when the chunk is
-              // provably all-null; otherwise stats were not recorded
-              else if (s.isNumNullsSet && s.getNumNulls == ch.getValueCount) false
-              else throw FooterFallback
-            }
-            if (present.isEmpty) None // all-null column: no stats entry
-            else {
-              val mins = present.map(ch => widen(ch.getStatistics.genericGetMin))
-              val maxs = present.map(ch => widen(ch.getStatistics.genericGetMax))
-              Some(c -> (mins.reduce((a, b) => if (cmp(a, b) <= 0) a else b),
-                maxs.reduce((a, b) => if (cmp(a, b) >= 0) a else b)))
-            }
-          }.toMap
-          // exact null counts whenever every chunk recorded one — an
-          // optional extra, never a reason to abandon the footer path
-          val nulls = statsCols.flatMap { c =>
-            val chunks = blocks.map(b =>
-              b.getColumns.asScala.find(_.getPath.toDotString == c).get)
-            if (chunks.forall(_.getStatistics != null) &&
-                chunks.forall(_.getStatistics.isNumNullsSet))
-              Some(c -> chunks.map(_.getStatistics.getNumNulls).sum)
-            else None
-          }.toMap
-          FileEntry(dataRel + "/" + st.getPath.getName, rows, st.getLen,
-            stats, nulls = nulls)
-        } finally reader.close()
-      }.filter(_.rows > 0L))
-    } catch { case FooterFallback => None }
-  }
-
-  private object FooterFallback
-    extends Exception with scala.util.control.NoStackTrace
-
-  /** Spark-aggregation stats harvest — the fallback for stats columns
-    * the footer can't vouch for: one pass over the NEW files only.
-    */
-  private def scanEntries(spark: SparkSession, dataDir: Path,
-      dataRel: String, statsCols: Seq[String]): Seq[FileEntry] = {
-    val aggs = count(lit(1)).cast("long").as("__rows") +:
-      statsCols.flatMap(c =>
-        Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"),
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c")))
-    spark.read.parquet(dataDir.toString)
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // bounded by file count — metadata, not data
-      .map { r =>
-        val abs = r.getString(0)
-        val name = abs.substring(abs.lastIndexOf('/') + 1)
-        val stats = statsCols.flatMap { c =>
-          val mn = r.getAs[Any](s"__min_$c")
-          val mx = r.getAs[Any](s"__max_$c")
-          if (mn == null || mx == null) None else Some(c -> (mn, mx))
-        }.toMap
-        val nulls = statsCols.map(c => c -> r.getAs[Long](s"__nulls_$c")).toMap
-        FileEntry(dataRel + "/" + name, r.getAs[Long]("__rows"), 0L, stats,
-          nulls = nulls)
-      }.toSeq
   }
 
   /** Compaction commit: coalesce every data file under `targetBytes`
@@ -1870,7 +1665,7 @@ object SnapshotLog {
           else {
             val r = f"data/v$v%05d-dv-" +
               java.util.UUID.randomUUID().toString.substring(0, 8)
-            writerFor(full, fs).parquet(new Path(tbl, r).toString)
+            ParquetWrite.write(full, tbl, r, fs, keepEmpty = true)
             Some(r)
           }
         full.unpersist()
@@ -2542,8 +2337,8 @@ object SnapshotLog {
     val rel = f"data/v$v%05d-eq-" +
       java.util.UUID.randomUUID().toString.substring(0, 8)
     val tbl = new Path(table)
-    writerFor(keys.distinct().toDF(physKeys: _*), fsOf(spark, tbl))
-      .parquet(new Path(tbl, rel).toString)
+    ParquetWrite.write(keys.distinct().toDF(physKeys: _*), tbl, rel, fsOf(spark, tbl),
+      keepEmpty = true)
     EqDelete(rel, physKeys.mkString(","), rows, seq)
   }
 
@@ -4658,6 +4453,11 @@ object SnapshotLog {
           .select(schema.fieldNames.map(col).toIndexedSeq: _*)
     }
 
+  /** Outstanding MOR batches beyond this fragment the read into that
+    * many union legs — compaction debt worth paying down.
+    */
+  private val EqDeleteWarnThreshold = 32
+
   /** Full visibility read: positional DVs, then equality deletes. A
     * table with no outstanding eq-deletes takes [[readFilesDv]]'s plan
     * untouched. With them, files group by WHICH deletes apply (their
@@ -4668,11 +4468,6 @@ object SnapshotLog {
     * cost MOR upserts trade for their O(batch) writes, cleared by
     * [[compact]].
     */
-  /** Outstanding MOR batches beyond this fragment the read into that
-    * many union legs — compaction debt worth paying down.
-    */
-  private val EqDeleteWarnThreshold = 32
-
   private def readFiles(spark: SparkSession, table: String, m: Manifest,
       files: Seq[FileEntry]): DataFrame =
     if (m.eqDeletes.isEmpty || files.isEmpty) readFilesDv(spark, table, m, files)
@@ -4709,7 +4504,7 @@ object SnapshotLog {
     * UTF-16 but above in UTF-8), so stats classification must compare
     * the same way the stats were made — the order ord64 assumes too.
     */
-  private def cmp(a: Any, b: Any): Int = (a, b) match {
+  private[snapshot] def cmp(a: Any, b: Any): Int = (a, b) match {
     case (x: Number, y: Number) =>
       java.lang.Double.compare(x.doubleValue(), y.doubleValue())
     case (x: String, y: String) => utf8Cmp(x, y)

@@ -187,24 +187,12 @@ object SnapshotStreamSource {
     case _ => false
   }
 
+  /** [[SnapshotLog.cmp]]'s order (UTF-8 byte order for strings, the order
+    * the stats were made in); None on a type mismatch, which never prunes.
+    */
   private def cmpAny(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: Number, y: Number) =>
-      Some(java.lang.Double.compare(x.doubleValue(), y.doubleValue()))
-    case (x: String, y: String) =>
-      // UTF-8 BYTE order — the order the stats were computed under
-      // (UTF8String); String.compareTo is UTF-16 order, which disagrees
-      // on supplementary-plane content and would wrongly PRUNE (lose
-      // rows), not just over-read
-      val (xb, yb) = (x.getBytes("UTF-8"), y.getBytes("UTF-8"))
-      val n = math.min(xb.length, yb.length)
-      var i = 0
-      var d = 0
-      while (i < n && d == 0) {
-        d = (xb(i) & 0xFF) - (yb(i) & 0xFF)
-        i += 1
-      }
-      Some(if (d != 0) d else xb.length - yb.length)
-    case _ => None // type mismatch: never prune on it
+    case (_: Number, _: Number) | (_: String, _: String) => Some(SnapshotLog.cmp(a, b))
+    case _ => None
   }
 
   /** Could this file hold a matching row? Range predicates test the
@@ -604,6 +592,8 @@ case class SnapshotReaderFactory(schema: StructType,
   */
 class SnapshotPartitionReader(file: String, schema: StructType,
     conf: Configuration) extends PartitionReader[InternalRow] {
+  import org.apache.parquet.HadoopReadOptions
+  import org.apache.parquet.conf.HadoopParquetConfiguration
   import org.apache.parquet.example.data.Group
   import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
   import org.apache.parquet.hadoop.example.GroupReadSupport
@@ -612,8 +602,13 @@ class SnapshotPartitionReader(file: String, schema: StructType,
 
   private val path = new Path(file)
 
+  /** Options over the passed conf: parquet-hadoop's defaults build a fresh
+    * `Configuration`, re-parsing Hadoop's default resources per file.
+    */
+  private[graft] val readOptions = HadoopReadOptions.builder(conf, path).build()
+
   private val (fileSchema, footerRows) = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf), readOptions)
     try (r.getFooter.getFileMetaData.getSchema,
       r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
     finally r.close()
@@ -646,7 +641,11 @@ class SnapshotPartitionReader(file: String, schema: StructType,
       val c = new Configuration(conf)
       c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
         requested.toString)
-      ParquetReader.builder(new GroupReadSupport(), path).withConf(c).build()
+      // built from an InputFile: the Path builder starts from a fresh conf
+      new ParquetReader.Builder[Group](HadoopInputFile.fromPath(path, c),
+          new HadoopParquetConfiguration(c)) {
+        override protected def getReadSupport() = new GroupReadSupport()
+      }.build()
     }
 
   // position of each required column inside the requested group (-1 = null)

@@ -112,8 +112,8 @@ object GraftSql {
     * version (time travel for SQL users). `statsCols` is remembered so
     * [[dml]] mutations commit new files with the same manifest stats
     * the table was built with.
-    */
-  /** `merge` selects the strategy [[dml]]'s plain MERGE (update-all +
+    *
+    * `merge` selects the strategy [[dml]]'s plain MERGE (update-all +
     * insert-all, no DELETE clause) dispatches to: `cow` (default —
     * exact-candidacy copy-on-write [[graft.sources.snapshot.SnapshotLog.upsert]])
     * or `mor` (equality-delete merge-on-read

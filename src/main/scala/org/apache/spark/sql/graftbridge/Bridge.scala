@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
 import org.apache.spark.sql.catalyst.analysis.LocalTempView
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
-import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.command.CreateViewCommand
 
 /** Minimal bridge to Spark's package-private Column↔Expression
@@ -42,15 +42,25 @@ object Bridge {
     * conf with its tasks outside the execution too.
     */
   def withPlannedRows[T](df: DataFrame, name: String)(
-      body: (RDD[InternalRow], InternalRow => Row) => T): T = {
-    val ds = df.asInstanceOf[Dataset[Row]]
-    val qe = ds.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some(name)) {
-      qe.executedPlan.resetMetrics()
+      body: (RDD[InternalRow], InternalRow => Row) => T): T =
+    withExecution(df, name) { qe =>
+      val ds = df.asInstanceOf[Dataset[Row]]
       val fromRow = ds.exprEnc
         .resolveAndBind(ds.logicalPlan.output, ds.sparkSession.sessionState.analyzer)
         .createDeserializer()
       body(qe.toRdd, fromRow)
+    }
+
+  /** Run `body` inside one SQL execution of `df`, named `name`, as
+    * `Dataset.withAction` opens one: plan metrics reset, and
+    * QueryExecutionListeners (and so `Observation`s) notified when it
+    * ends. `body` gets the frame's `QueryExecution`.
+    */
+  def withExecution[T](df: DataFrame, name: String)(body: QueryExecution => T): T = {
+    val qe = df.asInstanceOf[Dataset[Row]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      qe.executedPlan.resetMetrics()
+      body(qe)
     }
   }
 

@@ -15,7 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.snapshot.{SnapshotLog, SnapshotReaderFactory}
+import graft.sources.snapshot.{ForkFreeLocalFileSystem, ParquetWrite, SnapshotLog,
+  SnapshotPartitionReader, SnapshotReaderFactory}
 import graft.sources.wdstar.{WdsTarReaderFactory, WdsTarStreamingWriterFactory,
   WdsTarWriteBuilder, WdsTarWriterFactory}
 
@@ -124,5 +125,37 @@ class ConfShippingSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .repartition(2).write.format("wds-tar").mode("append").option("path", d).save()
     assert(spark.read.format("wds-tar").option("path", d).option("extensions", "txt")
       .load().count() == 2)
+  }
+
+  test("the snapshot write's per-task function carries no Configuration") {
+    import spark.implicits._
+    val t = dir("conf-shipping-snapshot-write")
+    val fs = ForkFreeLocalFileSystem.of(new org.apache.hadoop.fs.Path(t),
+      spark.sparkContext.hadoopConfiguration)
+    val task = ParquetWrite.prepare(Seq((1L, "a"), (2L, "b")).toDF("k", "u"),
+      new org.apache.hadoop.fs.Path(t), "data", fs, Seq("k", "u"), Seq("u"), 4096, Seq("u"),
+      identity)
+    try assertSlim(task) finally task.confBc.destroy()
+    // a commit through it lands its rows, stats and sketches
+    SnapshotLog.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "u").coalesce(1), t, "append",
+      Seq("k", "u"), bloomCols = Seq("u"), ndvCols = Seq("u"))
+    val f = SnapshotLog.manifest(spark, t, 1L).files.head
+    assert(f.rows == 2L && f.stats == Map("k" -> (1L, 2L), "u" -> ("a", "b")) &&
+      f.blooms.contains("u") && f.ndvs.contains("u"), f)
+  }
+
+  test("a snapshot stream reader opens its file with the conf it was given") {
+    import spark.implicits._
+    val t = dir("conf-shipping-reader")
+    SnapshotLog.commit(Seq(1L, 2L).toDF("id").coalesce(1), t, "append", Nil)
+    val file = Paths.get(t, SnapshotLog.manifest(spark, t, 1L).files.head.path).toString
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set("graft.conf-shipping.only-here", "yes")
+    val reader = new SnapshotPartitionReader(file, StructType(Seq(
+      StructField("id", org.apache.spark.sql.types.LongType))), conf)
+    try {
+      assert(reader.readOptions.getProperty("graft.conf-shipping.only-here") == "yes")
+      assert(reader.next() && reader.get().getLong(0) == 1L)
+    } finally reader.close()
   }
 }

@@ -92,9 +92,12 @@ class ForkFreeWriteSpec extends AnyFunSuite {
       new Path(stock, "_log/v.json"), bytes))
 
     val stockData = listing(java.nio.file.Paths.get(stock)).filterNot(_._1 == "_log")
-    assert(listing(dataDir) == stockData)
     assert(stockData.map(_._1) == Seq("._SUCCESS.crc", ".part-00000-U-c000.snappy.parquet.crc",
       "_SUCCESS", "part-00000-U-c000.snappy.parquet"), stockData)
+    // the statement's write has no commit step: exactly the part file and
+    // its .crc, with the stock names and modes, and no _SUCCESS or
+    // _temporary beside them
+    assert(listing(dataDir) == stockData.filterNot(_._1.contains("_SUCCESS")))
     assert(mode(dataDir) == mode(java.nio.file.Paths.get(stock)))
     assert(mode(manifest) ==
       mode(java.nio.file.Paths.get(stock, "_log", "v.json")))

@@ -1,18 +1,17 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.ListenerEvents
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.snapshot.SnapshotLog
+import graft.sources.snapshot.{ParquetWrite, SnapshotLog}
 import graft.sql.GraftSql
 
 /** Spark jobs, exchanges and output files of copy-on-write statements:
@@ -36,23 +35,41 @@ class RewriteShapeSpec extends AnyFunSuite {
     case _ => p.children.flatMap(nodes)
   })
 
-  /** What `body` ran: its Spark jobs and the executed plans of its
-    * parquet writes.
+  /** What a traced body ran: its Spark jobs; per snapshot write (the
+    * named SQL execution of `ParquetWrite`), its executed plan and the
+    * number of its jobs that ran the write tasks (the exchanges and
+    * broadcasts of the plan feeding it run jobs of their own); and how
+    * many jobs started after the last write ended.
     */
-  private def traced(body: => Any): (Int, Seq[SparkPlan]) = {
+  private case class Trace(jobs: Int, writes: Seq[SparkPlan], writeJobs: Seq[Int],
+      jobsAfterWrites: Int)
+
+  private def traced(body: => Any): Trace = {
     val sc = spark.sparkContext
     val group = s"rewrite-shape-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
+    // in listener-bus order: Left(execution id, ran the write tasks) per
+    // job of the group, Right(execution id) per ended snapshot write
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[Either[(Long, Boolean), Long]]()
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          val exec = Option(e.properties.getProperty("spark.sql.execution.id"))
+            .fold(-1L)(_.toLong)
+          events.add(Left((exec,
+            e.stageInfos.sortBy(_.stageId).lastOption
+              .exists(_.name.startsWith("runJob at ParquetWrite.scala")))))
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd
+            if ListenerEvents.executionName(end).contains(ParquetWrite.ExecutionName) =>
+          events.add(Right(end.executionId))
+        case _ =>
+      }
     }
     val planListener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        nodes(qe.executedPlan).collect { case w: DataWritingCommandExec => w }
-          .foreach(writes.add)
+        if (f == ParquetWrite.ExecutionName) writes.add(qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     sc.addSparkListener(jobListener)
@@ -65,7 +82,21 @@ class RewriteShapeSpec extends AnyFunSuite {
       sc.removeSparkListener(jobListener)
     }
     import scala.jdk.CollectionConverters._
-    (jobs.get, writes.asScala.toSeq)
+    val evs = events.asScala.toSeq
+    val writeIds = evs.collect { case Right(id) => id }
+    val jobs = evs.collect { case Left(j) => j }
+    Trace(jobs.size, writes.asScala.toSeq,
+      writeIds.map(id => jobs.count(_ == ((id, true)))),
+      evs.drop(evs.lastIndexWhere(_.isRight) + 1).size)
+  }
+
+  /** The trace of one statement that writes once: one write plan, run by
+    * one job, and no job after it.
+    */
+  private def oneWrite(what: String, t: Trace): Unit = {
+    assert(t.writes.size == 1, s"$what: ${t.writes}")
+    assert(t.writeJobs == Seq(1), s"$what: write jobs ${t.writeJobs}")
+    assert(t.jobsAfterWrites == 0, s"$what: ${t.jobsAfterWrites} jobs after its write")
   }
 
   private def exchanges(writes: Seq[SparkPlan]): Seq[SparkPlan] =
@@ -94,19 +125,19 @@ class RewriteShapeSpec extends AnyFunSuite {
   test("UPDATE and DELETE of a one-file range run one job, no exchange, and write one file") {
     val (t, (lo, hi)) = fourFiles("shape-one-file", "shp_v")
     assert(hi - lo > 40)
-    val (updJobs, updWrites) = traced {
+    val upd = traced {
       GraftSql.dml(spark, s"UPDATE shp_v SET qty = qty + 100 WHERE k BETWEEN ${lo + 10} AND ${lo + 30}")
     }
-    assert(updWrites.size == 1, updWrites)
-    assert(updJobs == 1, s"UPDATE ran $updJobs jobs")
-    assert(exchanges(updWrites).isEmpty, updWrites.head)
+    oneWrite("UPDATE", upd)
+    assert(upd.jobs == 1, s"UPDATE ran ${upd.jobs} jobs")
+    assert(exchanges(upd.writes).isEmpty, upd.writes.head)
     assert(added(t, 2L) == 1)
-    val (delJobs, delWrites) = traced {
+    val del = traced {
       GraftSql.dml(spark, s"DELETE FROM shp_v WHERE k BETWEEN ${lo + 20} AND ${lo + 25}")
     }
-    assert(delWrites.size == 1, delWrites)
-    assert(delJobs == 1, s"DELETE ran $delJobs jobs")
-    assert(exchanges(delWrites).isEmpty, delWrites.head)
+    oneWrite("DELETE", del)
+    assert(del.jobs == 1, s"DELETE ran ${del.jobs} jobs")
+    assert(exchanges(del.writes).isEmpty, del.writes.head)
     assert(added(t, 3L) == 1)
     val got = spark.sql("SELECT count(*), sum(qty) FROM shp_v").head
     val kept = (0L until 4000L).filterNot(k => k >= lo + 20 && k <= lo + 25)
@@ -119,19 +150,19 @@ class RewriteShapeSpec extends AnyFunSuite {
     val (t, (lo, _)) = fourFiles("shape-merge", "shm_v")
     Seq((lo + 5, 100L), (lo + 6, 101L), (9000L, 1L)).toDF("k", "qty")
       .createOrReplaceTempView("shm_src")
-    val (jobs, writes) = traced {
+    val merge = traced {
       GraftSql.dml(spark,
         """MERGE INTO shm_v USING shm_src ON shm_v.k = shm_src.k
           |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     }
-    assert(jobs <= 4, s"star MERGE ran $jobs jobs")
-    assert(writes.size == 1, writes)
+    assert(merge.jobs <= 4, s"star MERGE ran ${merge.jobs} jobs")
+    oneWrite("MERGE", merge)
     // the join's two exchanges, and no REBALANCE above it
-    val shuffles = exchanges(writes)
+    val shuffles = exchanges(merge.writes)
     assert(shuffles.size <= 2 && !shuffles.exists {
       case e: ShuffleExchangeExec => e.shuffleOrigin.toString.startsWith("REBALANCE")
       case _ => false
-    }, writes.head)
+    }, merge.writes.head)
     assert(added(t, 2L) == 1)
     val got = spark.sql("SELECT count(*), sum(qty) FROM shm_v").head
     val want = (0L until 4000L).map(k => k % 7).sum - (lo + 5) % 7 - (lo + 6) % 7 + 100 + 101 + 1
@@ -146,12 +177,54 @@ class RewriteShapeSpec extends AnyFunSuite {
       Seq("k")))
     GraftSql.registerSnapshot(spark, "sh3_v", t, None, Seq("k"))
     assert(SnapshotLog.manifest(spark, t, 3L).files.size == 3)
-    val (jobs, writes) = traced {
+    val upd = traced {
       GraftSql.dml(spark, "UPDATE sh3_v SET qty = qty + 1 WHERE k BETWEEN 0 AND 100")
     }
-    assert(jobs == 1, s"UPDATE ran $jobs jobs")
-    assert(exchanges(writes).isEmpty, writes.head)
+    oneWrite("UPDATE", upd)
+    assert(upd.jobs == 1, s"UPDATE ran ${upd.jobs} jobs")
+    assert(exchanges(upd.writes).isEmpty, upd.writes.head)
     assert(SnapshotLog.manifest(spark, t, 4L).files.size == 1)
     assert(spark.sql("SELECT sum(qty) FROM sh3_v").head.getLong(0) == 3L * (0 + 1 + 2 + 3 + 4 + 5))
+  }
+
+  test("every statement's write runs one job, and no job runs after it") {
+    import spark.implicits._
+    val (t, (lo, _)) = fourFiles("shape-one-job", "sh1_v")
+    oneWrite("UPDATE", traced {
+      GraftSql.dml(spark, s"UPDATE sh1_v SET qty = qty + 1 WHERE k BETWEEN ${lo + 1} AND ${lo + 3}")
+    })
+    oneWrite("DELETE", traced {
+      GraftSql.dml(spark, s"DELETE FROM sh1_v WHERE k BETWEEN ${lo + 4} AND ${lo + 6}")
+    })
+    oneWrite("INSERT", traced { GraftSql.dml(spark, "INSERT INTO sh1_v VALUES (9001, 1)") })
+    Seq((lo + 7, 70L)).toDF("k", "qty").createOrReplaceTempView("sh1_src")
+    oneWrite("MERGE", traced {
+      GraftSql.dml(spark,
+        "MERGE INTO sh1_v USING sh1_src ON sh1_v.k = sh1_src.k WHEN MATCHED THEN UPDATE SET *")
+    })
+    val v = SnapshotLog.latestVersion(spark, t).get
+    assert(v == 5L)
+    // a commit that also sketches: blooms and NDV come from the same job
+    val c = dir("shape-one-job-commit")
+    val commit = traced {
+      SnapshotLog.commit(spark.range(0, 300).select(col("id").as("k"),
+        concat(lit("u"), col("id")).as("u")), c, "append", Seq("k"),
+        bloomCols = Seq("u"), ndvCols = Seq("u"))
+    }
+    oneWrite("commit", commit)
+    assert(commit.jobs == 1, s"commit ran ${commit.jobs} jobs")
+    assert(SnapshotLog.manifest(spark, c, 1L).files.forall(f =>
+      f.blooms.contains("u") && f.ndvs.contains("u") && f.stats.contains("k")))
+    // a deletion-vector delete writes its mask; a MOR upsert its data and
+    // its equality-delete keys, each in one job
+    oneWrite("DV delete", traced { SnapshotLog.deleteWhereDV(spark, t, "k", lo + 10, lo + 12) })
+    val mor = traced { SnapshotLog.upsertMOR(Seq((lo + 20, 5L)).toDF("k", "qty"), t, "k") }
+    assert(mor.writes.size == 2 && mor.writeJobs == Seq(1, 1), mor)
+    assert(mor.jobsAfterWrites == 0, mor)
+    val want = (0L until 4000L).filterNot(k => k >= lo + 4 && k <= lo + 6)
+      .filterNot(k => k >= lo + 10 && k <= lo + 12).size + 1
+    val after = SnapshotLog.read(spark, t)
+    assert(after.count() == want)
+    assert(after.where(col("k") === lo + 20).select("qty").head.getLong(0) == 5L)
   }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Per-job cost breakdown of a Spark event log.
 
-    python3 tools/job_timing.py EVENT_LOG [--last N]
+    python3 tools/job_timing.py EVENT_LOG [--last N] [--by-stage]
 
 Reads an uncompressed Spark event log (one JSON event per line; record
 one by adding `-Dspark.eventLog.enabled=true -Dspark.eventLog.compress=false
@@ -17,7 +17,10 @@ sum over those jobs of each phase:
     job total        job submitted to job completed
     result bytes     task result size
 
-A job's task phases are summed over its tasks. EVENT_LOG may be a
+A job's task phases are summed over its tasks. `--by-stage` groups the
+jobs by the name of their last stage, the call site that submitted them
+(e.g. `runJob at ParquetWrite.scala:66`), and prints each group's job
+count and per-job medians, the largest group first. EVENT_LOG may be a
 directory, in which case its newest log is read (Spark 4 writes rolling
 logs: a directory `eventlog_v2_<app>` of `events_<n>_<app>` files).
 
@@ -48,7 +51,9 @@ def read_jobs(lines):
         kind = ev.get("Event")
         if kind == "SparkListenerJobStart":
             jid = ev["Job ID"]
-            jobs[jid] = {"submit": ev["Submission Time"]}
+            infos = ev.get("Stage Infos") or [{}]
+            last = max(infos, key=lambda i: i.get("Stage ID", -1))
+            jobs[jid] = {"submit": ev["Submission Time"], "stage": last.get("Stage Name", "?")}
             for sid in ev.get("Stage IDs", []):
                 stage_job[sid] = jid
         elif kind == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
@@ -78,6 +83,7 @@ def read_jobs(lines):
             "result fetch": fetch,
             "job total": j["end"] - j["submit"],
             "result bytes": total("Result Size"),
+            "stage": j["stage"],
         }
     return out
 
@@ -93,6 +99,23 @@ def summarize(jobs, last=0):
         vals = [jobs[i][name] for i in ids]
         lines.append("%-15s %9.1f %-2s %11.0f %s" % (
             name, statistics.median(vals), unit, sum(vals), unit))
+    return lines
+
+
+def by_stage(jobs, last=0):
+    """Per-stage-name lines for the last `last` jobs by id (all when 0):
+    job count and the median per job of each phase, largest group first."""
+    ids = sorted(jobs)
+    if last:
+        ids = ids[-last:]
+    groups = {}
+    for i in ids:
+        groups.setdefault(jobs[i]["stage"], []).append(jobs[i])
+    lines = ["%5s " % "jobs" + " ".join("%14s" % name for name, _ in PHASES) + "  stage"]
+    for stage, js in sorted(groups.items(), key=lambda g: (-len(g[1]), g[0])):
+        lines.append("%5d " % len(js) + " ".join(
+            "%14.1f" % statistics.median(j[name] for j in js) for name, _ in PHASES)
+            + "  " + stage)
     return lines
 
 
@@ -121,6 +144,8 @@ def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("event_log")
     ap.add_argument("--last", type=int, default=0, help="only the last N jobs (default all)")
+    ap.add_argument("--by-stage", action="store_true",
+                    help="medians per group of jobs with the same last stage name")
     args = ap.parse_args(argv)
     paths = log_files(args.event_log)
     try:
@@ -131,7 +156,7 @@ def main(argv=None):
     if not jobs:
         print("no finished job in %s" % args.event_log)
         return 2
-    print("\n".join(summarize(jobs, args.last)))
+    print("\n".join((by_stage if args.by_stage else summarize)(jobs, args.last)))
     return 0
 
 
