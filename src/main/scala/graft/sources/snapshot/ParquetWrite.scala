@@ -2,10 +2,13 @@ package graft.sources.snapshot
 
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -46,20 +49,43 @@ private[graft] object ParquetWrite {
       bloomBits: Int = SnapshotLog.DefaultBloomBits, ndvCols: Seq[String] = Nil,
       column: String => String = identity, keepEmpty: Boolean = false): Seq[FileEntry] = {
     val task = prepare(df, tbl, rel, fs, statsCols, bloomCols, bloomBits, ndvCols, column)
-    try {
-      val written = Bridge.withExecution(df, ExecutionName) { qe =>
-        df.sparkSession.sparkContext.runJob(qe.executedPlan.execute(), task)
-      }.flatten.toSeq
-      if (written.isEmpty && keepEmpty) {
-        val w = task.open(0, UUID.randomUUID(), 0)
-        w.close()
-        task.publish(fs, new Path(w.path))
-      }
-      written.sortBy(_.path)
-    } finally task.confBc.destroy()
+    val written = Bridge.withExecution(df, ExecutionName) { qe =>
+      df.sparkSession.sparkContext.runJob(qe.executedPlan.execute(), task)
+    }.flatten.toSeq
+    if (written.isEmpty && keepEmpty) {
+      val w = task.open(0, UUID.randomUUID(), 0)
+      w.close()
+      task.publish(fs, new Path(w.path))
+    }
+    written.sortBy(_.path)
   }
 
-  /** The per-task function of a [[write]], with a fresh conf broadcast. */
+  /** Conf broadcasts of recent writes, by context and exact conf content,
+    * least recently used first. Eviction only drops the reference (a write
+    * in flight may still hold the broadcast); the ContextCleaner frees it
+    * once unreachable.
+    */
+  private val confBroadcasts = new java.util.LinkedHashMap[
+      (SparkContext, Map[String, String]), Broadcast[SerializableConfiguration]](
+      16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[
+        (SparkContext, Map[String, String]), Broadcast[SerializableConfiguration]]): Boolean =
+      size > 8
+  }
+
+  /** A broadcast of `conf`, shared by every write whose prepared conf has
+    * the same entries (the session's SQL confs among them) in `sc`.
+    */
+  private[snapshot] def confBroadcast(sc: SparkContext,
+      conf: Configuration): Broadcast[SerializableConfiguration] = {
+    val key = (sc, conf.iterator.asScala.map(e => e.getKey -> e.getValue).toMap)
+    confBroadcasts.synchronized {
+      confBroadcasts.keySet.removeIf(_._1.isStopped)
+      confBroadcasts.computeIfAbsent(key, _ => sc.broadcast(new SerializableConfiguration(conf)))
+    }
+  }
+
+  /** The per-task function of a [[write]], over its conf's broadcast. */
   private[graft] def prepare(df: DataFrame, tbl: Path, rel: String, fs: FileSystem,
       statsCols: Seq[String], bloomCols: Seq[String], bloomBits: Int,
       ndvCols: Seq[String], column: String => String): ParquetWriteTask = {
@@ -79,8 +105,7 @@ private[graft] object ParquetWrite {
       val ref = BoundReference(i, schema(i).dataType, nullable = true)
       if (ref.dataType == StringType) ref else Cast(ref, StringType, Some(tz))
     }
-    new ParquetWriteTask(
-      spark.sparkContext.broadcast(new SerializableConfiguration(conf)), factory, schema,
+    new ParquetWriteTask(confBroadcast(spark.sparkContext, conf), factory, schema,
       new Path(tbl, rel).toString, rel,
       factory.getFileExtension(new TaskAttemptContextImpl(conf, new TaskAttemptID())),
       spark.sessionState.conf.maxRecordsPerFile,

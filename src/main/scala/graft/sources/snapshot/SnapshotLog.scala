@@ -4117,7 +4117,10 @@ object SnapshotLog {
       store(fs).read(fs, manifestPath(tbl, version)), "UTF-8"))
 
   /** The table at `version` (default: latest). File list comes from the
-    * manifest alone — no data-directory listing at any table size.
+    * manifest alone — no data-directory listing at any table size — and
+    * so does the scan's plan: its file index serves each file's path and
+    * length from the manifest ([[readFilesPhys]]), so building the frame
+    * reads one manifest and runs no Spark job.
     */
   def read(spark: SparkSession, table: String,
       version: Option[Long] = None): DataFrame = {
@@ -4367,17 +4370,23 @@ object SnapshotLog {
   }
 
   /** Scan under physical names — position readers and DV plumbing hang
-    * `_metadata` columns off this BEFORE the logical aliasing.
+    * `_metadata` columns off this BEFORE the logical aliasing. The scan
+    * is planned from the manifest alone ([[ManifestFileIndex]]): each
+    * file's path resolves against the table root, qualified once, and
+    * its length is the entry's, so building it touches no FileSystem.
+    * A data file missing from disk fails the scan's task, not this call.
+    * An entry of a manifest older than recorded lengths (bytes 0) is
+    * stat'd: the scan would read a zero-length file as empty.
     */
   private def readFilesPhys(spark: SparkSession, table: String, m: Manifest,
       files: Seq[FileEntry]): DataFrame = {
-    val schema = physSchema(m)
-    if (files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      val abs = files.map(f => resolveRel(new Path(table), f.path).toString)
-      spark.read.schema(schema).parquet(abs: _*)
-    }
+    val fs = fsOf(spark, new Path(table))
+    val tbl = fs.makeQualified(new Path(table))
+    val index = new ManifestFileIndex(files.map { f =>
+      val p = resolveRel(tbl, f.path)
+      p -> (if (f.bytes > 0) f.bytes else fs.getFileStatus(p).getLen)
+    })
+    org.apache.spark.sql.graftbridge.Bridge.parquetScan(spark, index, physSchema(m))
   }
 
   private def readFilesRaw(spark: SparkSession, table: String, m: Manifest,
@@ -4633,13 +4642,26 @@ object SnapshotLog {
   private def parseJson(s: String): RawManifest = {
     val root = mapper.readValue(s, classOf[java.util.Map[String, Object]]).asScala
     def jlong(o: Object): Long = o.asInstanceOf[Number].longValue()
+    // Jackson writes a double's NaN and infinities as JSON strings: a
+    // float or double column's bound reads them back as Doubles (which
+    // `cmp` orders as Spark does, NaN above every number); any other
+    // column's string bound stays a string
+    lazy val floating: Set[String] = org.apache.spark.sql.types.StructType
+      .fromDDL(root("schema").toString).fields.collect {
+        case f if f.dataType == org.apache.spark.sql.types.FloatType ||
+          f.dataType == org.apache.spark.sql.types.DoubleType => f.name.toLowerCase
+      }.toSet
+    def bound(c: String, o: Object): Any = o match {
+      case s: String if NonFinite(s) && floating(c.toLowerCase) => s.toDouble
+      case _ => norm(o)
+    }
     def fileList(o: Object): Seq[FileEntry] =
       o.asInstanceOf[java.util.List[_]].asScala.map { fo =>
         val fm = fo.asInstanceOf[java.util.Map[String, Object]].asScala
         val stats = fm("stats").asInstanceOf[java.util.Map[String, Object]]
           .asScala.map { case (c, co) =>
             val cm = co.asInstanceOf[java.util.Map[String, Object]].asScala
-            c -> (norm(cm("min")), norm(cm("max")))
+            c -> (bound(c, cm("min")), bound(c, cm("max")))
           }.toMap
         val blooms = fm.get("blooms").map(
           _.asInstanceOf[java.util.Map[String, Object]].asScala
@@ -4688,6 +4710,8 @@ object SnapshotLog {
           lm("n").asInstanceOf[Number].intValue())
       })
   }
+
+  private val NonFinite = Set("NaN", "Infinity", "-Infinity")
 
   /** Jackson deserializes small integers as Integer; widen to Long so
     * stat comparisons and round-trips are type-stable.

@@ -8,6 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.command.CreateViewCommand
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge to Spark's package-private Column↔Expression
   * conversion (`org.apache.spark.sql.classic.ExpressionUtils` is
@@ -31,6 +34,18 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema, isStreaming = false)
+
+  /** A parquet scan of the files `index` serves, read as `dataSchema`:
+    * the relation `spark.read.schema(dataSchema).parquet(paths)` resolves
+    * (an unpartitioned `HadoopFsRelation`, its data schema made nullable),
+    * over an index the caller built in place of the `InMemoryFileIndex`.
+    */
+  def parquetScan(spark: org.apache.spark.sql.SparkSession, index: FileIndex,
+      dataSchema: StructType): DataFrame = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    Dataset.ofRows(session, LogicalRelation(HadoopFsRelation(index, new StructType(),
+      dataSchema.asNullable, None, new ParquetFileFormat, Map.empty)(session)))
+  }
 
   /** Open `df` as one SQL execution the way `Dataset.withAction` does
     * (`SQLExecution.withNewExecutionId`, plan metrics reset) and run

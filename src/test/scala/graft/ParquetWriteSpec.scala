@@ -13,6 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.CommitSketches
 import graft.sources.snapshot.{ParquetWrite, SnapshotLog}
 import graft.sources.snapshot.SnapshotLog.FileEntry
+import graft.sql.GraftSql
 
 /** The snapshot write's task-side manifest figures equal what a harvest
   * of the written files reports: the parquet footers where they can
@@ -176,7 +177,10 @@ class ParquetWriteSpec extends AnyFunSuite {
 
   private val mapper = new ObjectMapper()
 
-  private def viaJson(v: Any): Any = {
+  /** `v` written to JSON and read back as the manifest reads a bound: a
+    * `floating` column's NaN and infinities (JSON strings) as Doubles.
+    */
+  private def viaJson(v: Any, floating: Boolean): Any = {
     val m = new java.util.HashMap[String, Object]()
     m.put("v", v.asInstanceOf[Object])
     mapper.readValue(mapper.writeValueAsString(m), classOf[java.util.Map[String, Object]])
@@ -184,6 +188,7 @@ class ParquetWriteSpec extends AnyFunSuite {
       case n: java.lang.Integer => n.longValue()
       case n: java.lang.Long => n.longValue()
       case n: Number => n.doubleValue()
+      case s: String if floating => s.toDouble
       case o => o
     }
   }
@@ -289,8 +294,10 @@ class ParquetWriteSpec extends AnyFunSuite {
           assert(g.stats.keySet == w.stats.keySet && !g.stats.contains("nothing"), ctx)
           for ((c, (gMin, gMax)) <- g.stats; ((wMin, wMax), (sMin, sMax)) <- Seq(
               (w.stats(c), spark0(g.path)(if (c == "i_now") "i" else c)))) {
-            for ((gv, wv, sv, signed) <- Seq((gMin, viaJson(wMin), sMin, -0.0),
-                (gMax, viaJson(wMax), sMax, 0.0))) {
+            val floating = Set[DataType](FloatType, DoubleType)(
+              Schema(if (c == "i_now") "i" else c).dataType)
+            for ((gv, wv, sv, signed) <- Seq((gMin, viaJson(wMin, floating), sMin, -0.0),
+                (gMax, viaJson(wMax, floating), sMax, 0.0))) {
               if (footers && (wv match { case w: Double => w == 0.0; case _ => false }))
                 footerZeros += 1
               if (!same(gv, wv)) {
@@ -313,7 +320,8 @@ class ParquetWriteSpec extends AnyFunSuite {
             if (Set("f", "d")(c) && (sMax match {
                 case x: java.lang.Float => x.isNaN; case x: java.lang.Double => x.isNaN
                 case _ => false })) {
-              assert(gMax == "NaN", s"$ctx $c: NaN is Spark's max, got $gMax")
+              assert(gMax match { case x: Double => x.isNaN; case _ => false },
+                s"$ctx $c: NaN is Spark's max, got $gMax")
               nanBounds += 1
             }
           }
@@ -323,6 +331,56 @@ class ParquetWriteSpec extends AnyFunSuite {
     // the named edge cases were exercised
     assert(zeroSigns > 0 && footerZeros > 0 && floatDecimals > 0 && nanBounds > 0,
       (zeroSigns, footerZeros, floatDecimals, nanBounds))
+  }
+
+  test("a NaN bound orders above every number in range reads and deletes") {
+    import spark.implicits._
+    val t = dir("parquet-write-nan")
+    val files = Seq(
+      Seq((0.5, 0.5f, "NaN"), (Double.NaN, Float.NaN, "x")),
+      Seq((2.0, 2.0f, "a"), (3.0, Float.PositiveInfinity, "b")),
+      Seq((-1.0, -1.0f, "c"), (0.25, 0.25f, "d")))
+    files.foreach(rows => SnapshotLog.commit(rows.toDF("d", "f", "s").coalesce(1), t,
+      "append", Seq("d", "f", "s")))
+    def show(ds: Seq[Double]) = ds.sorted.map(_.toString)
+    val all = files.flatten
+    for ((c, pick) <- Seq[(String, ((Double, Float, String)) => Double)](
+        ("d", _._1), ("f", _._2.toDouble))) {
+      val (pruned, scanned, total) = SnapshotLog.readPruned(spark, t, c, 0.0, 1.0)
+      assert(show(pruned.select(col(c).cast("double")).as[Double].collect().toSeq) ==
+        show(all.map(pick).filter(v => v >= 0.0 && v <= 1.0)), c)
+      assert(scanned == 2 && total == 3, (c, scanned, total))
+    }
+    GraftSql.registerSnapshot(spark, "nan_bounds", t)
+    GraftSql.dml(spark, "DELETE FROM nan_bounds WHERE d BETWEEN 0 AND 1")
+    assert(show(SnapshotLog.read(spark, t).select("d").as[Double].collect().toSeq) ==
+      show(all.map(_._1).filterNot(v => v >= 0.0 && v <= 1.0)))
+    // a float or double bound reads back as a Double; a string one stays a string
+    val stats = SnapshotLog.manifest(spark, t, 3L).files.map(_.stats)
+    def nan(x: Any) = x match { case d: Double => d.isNaN; case _ => false }
+    assert(stats.exists(s => nan(s("d")._2) && nan(s("f")._2) && s("s")._1 == "NaN"), stats)
+    assert(stats.exists(_("f")._2 == Double.PositiveInfinity), stats)
+  }
+
+  test("writes under one conf share its broadcast; a changed session conf gets another") {
+    val d = dir("parquet-write-conf")
+    val fs = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val df = spark.range(0, 4).toDF("k")
+    def broadcastId(): Long = ParquetWrite.prepare(df, new Path(d), "data", fs, Nil, Nil,
+      SnapshotLog.DefaultBloomBits, Nil, identity).confBc.id
+    val first = broadcastId()
+    assert(broadcastId() == first)
+    val key = "spark.graft.test.parquetWriteConf"
+    spark.conf.set(key, "on")
+    val changed = try {
+      val id = ParquetWrite.prepare(df, new Path(d), "data", fs, Nil, Nil,
+        SnapshotLog.DefaultBloomBits, Nil, identity).confBc
+      assert(id.value.value.get(key) == "on")
+      id.id
+    } finally spark.conf.unset(key)
+    assert(changed != first)
+    assert(broadcastId() == first)
+    assert(ParquetWrite.write(df, new Path(d), "data", fs).map(_.rows).sum == 4L)
   }
 
   test("a zero bound never lets a range delete drop or skip a file wrongly") {
@@ -352,8 +410,7 @@ class ParquetWriteSpec extends AnyFunSuite {
     // an attempt killed mid-write runs no cleanup: its writer never closes
     val task = ParquetWrite.prepare(keys, new Path(d), "keys", fs, Nil, Nil,
       SnapshotLog.DefaultBloomBits, Nil, identity)
-    val killed = try task.open(0, java.util.UUID.randomUUID(), 0)
-    finally task.confBc.destroy()
+    val killed = task.open(0, java.util.UUID.randomUUID(), 0)
     try {
       assert(new java.io.File(d, "keys").list().exists(_.endsWith(".parquet")))
       assert(ParquetWrite.write(keys, new Path(d), "keys", fs).map(_.rows).sum == 10L)

@@ -33,17 +33,28 @@ class SnapshotRebaseMatrixSpec extends AnyFunSuite {
     s.range(lo, hi).select($"id",
       concat(lit(payload), $"id").as("payload"))
 
-  /** Seed: three single-file commits [0,100) [100,200) [200,300) plus
-    * an outstanding MOR key delete on 290..294 — so `compact` always
-    * has real eq-debt work and eq-deletes participate in every pairing.
+  /** The seed, built once: three single-file commits [0,100) [100,200)
+    * [200,300) plus an outstanding MOR key delete on 290..294 — so
+    * `compact` always has real eq-debt work and eq-deletes participate
+    * in every pairing.
+    */
+  private lazy val seeded: java.io.File = {
+    val t = Paths.get("target", "rebase-mx-seed").toAbsolutePath.toFile
+    org.apache.commons.io.FileUtils.deleteQuietly(t)
+    Seq(0L, 100L, 200L).foreach(lo =>
+      SnapshotLog.commit(df(lo, lo + 100).repartition(1), t.toString,
+        "append", Seq("id")))
+    SnapshotLog.deleteKeysMOR(s.range(290, 295).toDF("id"), t.toString, "id")
+    t
+  }
+
+  /** A fresh copy of the seed at `t`: manifests hold table-relative
+    * paths, so the copied directory is the same four-version table.
     */
   private def seed(t: String): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      Paths.get(t).toAbsolutePath.toFile)
-    Seq(0L, 100L, 200L).foreach(lo =>
-      SnapshotLog.commit(df(lo, lo + 100).repartition(1), t, "append",
-        Seq("id")))
-    SnapshotLog.deleteKeysMOR(s.range(290, 295).toDF("id"), t, "id")
+    val dst = Paths.get(t).toAbsolutePath.toFile
+    org.apache.commons.io.FileUtils.deleteQuietly(dst)
+    org.apache.commons.io.FileUtils.copyDirectory(seeded, dst)
   }
 
   private final case class Op(name: String)(val run: String => Unit)
