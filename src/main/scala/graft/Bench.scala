@@ -67,14 +67,9 @@ object Bench {
         Option(new java.io.File(".").listFiles()).toSeq.flatten
           .filter(_.getName.matches("BENCH_r\\d+\\.json"))
           .sortBy(_.getName).lastOption)
-      file.filter(_.isFile).map { f =>
-        val txt = new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        val body = """"queries":\{(.*?)\}""".r
-          .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-        """"(\w+)":([0-9.eE+-]+)""".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
+      file.filter(_.isFile).map(f => canonicalQueries(new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")))
+        .getOrElse(Map.empty)
     }
     val allRuns = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val errors = scala.collection.mutable.LinkedHashMap[String, Throwable]()
@@ -190,6 +185,30 @@ object Bench {
       if (used + e.length + 1 <= budget) { parts += e; used += e.length + 1 }
     }
     parts.mkString(",")
+  }
+
+  /** Per-query seconds of a bench artifact: the `queries` map of the
+    * artifact's own object (the `BENCH_full.json` form), or else of the
+    * last compact result line (`{"metric":"total",...}`) inside its
+    * `tail` string, the form a round artifact keeps the run's output in.
+    * Empty when neither parses.
+    */
+  private[graft] def canonicalQueries(json: String): Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def tree(s: String) = scala.util.Try(mapper.readTree(s)).toOption
+      .filter(n => n != null && n.isObject)
+    val line = "{\"metric\""
+    val embedded = tree(json).flatMap(r => Option(r.get("tail")))
+      .filter(_.isTextual).fold(Array.empty[String])(_.asText.split("\n"))
+      .reverseIterator.collect {
+        case l if l.contains(line) => l.substring(l.indexOf(line)) }
+    (Iterator(json) ++ embedded).flatMap(tree)
+      .map(r => Option(r.get("queries")).filter(_.isObject).toSeq
+        .flatMap(_.properties.asScala)
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }
+        .toMap)
+      .find(_.nonEmpty).getOrElse(Map.empty)
   }
 
   /** `s` as a JSON string literal. */

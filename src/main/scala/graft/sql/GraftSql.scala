@@ -1180,12 +1180,17 @@ object GraftSql {
   /** The copy-on-write MERGE whose one matched clause is unconditional
     * (`WHEN MATCHED THEN UPDATE SET *|<assignments>`, any `WHEN NOT
     * MATCHED [AND cond] THEN INSERT` clauses; no residual ON, BY SOURCE
-    * or CDC shape) in two Spark executions through
+    * or CDC shape) through
     * [[graft.sources.snapshot.SnapshotLog.mergeByKeys]]: the source keys
     * probe one manifest, then exactly the candidate files rewrite as a
     * full outer join of their live rows with the source on the merge
-    * keys. A row with both sides takes the clause's values, a
-    * target-only row is kept, a source-only row takes the insert
+    * keys, the source as `mergeByKeys` partitions it. From a small batch
+    * of driver-held source rows (`SnapshotLog.smallLocal`) with
+    * candidates that fit one advisory partition that is one SQL
+    * execution and one Spark job (the probe runs on the driver, the join
+    * needs no exchange); any other source adds the probe's aggregation
+    * and the join's shuffle. A row with both sides takes the clause's
+    * values, a target-only row is kept, a source-only row takes the insert
     * when-chain or drops. A source row that matches any target row
     * matches inside a candidate file (its key lies in that file's
     * [min,max]), so source-only here means NOT MATCHED for the whole
@@ -1214,10 +1219,10 @@ object GraftSql {
       ("__graft_in_t", "__graft_in_s", "__graft_nsrc", "__graft_ins")
     val fields = schema.fields.toIndexedSeq
     graft.sources.snapshot.SnapshotLog.mergeByKeys(srcDf, t, tKeys, stats,
-        mayInsert = insClauses.nonEmpty) { (target, guardDups) =>
+        mayInsert = insClauses.nonEmpty) { (target, shaped, guardDups) =>
       val source =
-        if (!guardDups) srcDf
-        else srcDf.withColumn(nSrc, count(l(1)).over(
+        if (!guardDups) shaped
+        else shaped.withColumn(nSrc, count(l(1)).over(
           org.apache.spark.sql.expressions.Window
             .partitionBy(tKeys.map(c): _*)))
       val both = c(inT).isNotNull && c(inS).isNotNull
@@ -1238,7 +1243,7 @@ object GraftSql {
               when(c(nSrc) > 1, raise_error(l(AmbiguousMergeMsg))).otherwise(v)
             else v
           when(both, guarded).as(s"__graft_m$i")
-        } ++ srcDf.columns.map(cn => c(s"$src.$cn").as(cn)) :+
+        } ++ shaped.columns.map(cn => c(s"$src.$cn").as(cn)) :+
         c(inT) :+ c(inS)): _*).as(src)
       val kept =
         if (insClauses.isEmpty) staged.where(c(inT).isNotNull)
@@ -1270,7 +1275,10 @@ object GraftSql {
     * ([[mergeOneRewrite]]) and reads its source once per pass; its
     * source is pinned only when it could diverge between the two — a
     * deterministic plan over driver-held rows or already-pinned blocks
-    * is read as it is. Every other shape PINS its source (materialized
+    * is read as it is, and a small batch of driver-held rows is probed on
+    * the driver, so such a MERGE is the write's one SQL execution and one
+    * job. Every
+    * other shape PINS its source (materialized
     * exactly once — [[graft.sources.snapshot.SnapshotLog.pin]]) before
     * anything probes it, so a non-deterministic source cannot diverge
     * between the candidacy probe and the rewrite, and the many

@@ -33,4 +33,20 @@ class BenchSpec extends AnyFunSuite {
     // entries past the budget are left out, slowest first
     assert(Bench.slowest(Seq("qa" -> 1.5, "qb" -> 12.25), 13) == "\"qb\":12.250")
   }
+
+  test("the outlier guard reads the queries of the committed round artifact") {
+    val r17 = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("BENCH_r17.json")), "UTF-8")
+    val canon = Bench.canonicalQueries(r17)
+    // the artifact keeps the compact line as an escaped `tail` string
+    assert(canon.size == 55, canon.size)
+    assert(canon.get("qd2_sql_merge_per_row") == Some(9.046))
+    assert(canon.get("qc4_sql_dml") == Some(6.973))
+    // a full artifact carries the map itself; anything else reads empty
+    assert(Bench.canonicalQueries(
+      """{"metric":"total","value":3.5,"queries":{"qa":1.5,"qb":2},"sf":"x"}""") ==
+      Map("qa" -> 1.5, "qb" -> 2.0))
+    assert(Bench.canonicalQueries("""{"n":16,"tail":"no result line","parsed":null}""").isEmpty)
+    assert(Bench.canonicalQueries("not json").isEmpty)
+  }
 }

@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.snapshot.SnapshotLog
 import graft.sql.GraftSql
 
-/** The two-execution copy-on-write MERGE (one candidacy probe, one
-  * full-outer-join rewrite) checked against an in-memory model, its
-  * refusal surface, and the single-file local INSERT.
+/** The one-probe one-rewrite copy-on-write MERGE (a candidacy probe,
+  * on the driver for driver-held source rows, then one full-outer-join
+  * rewrite) checked against an in-memory model, its refusal surface, and
+  * the single-file local INSERT.
   */
 class MergeRewriteSpec extends AnyFunSuite {
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,9 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.snapshot.{ParquetWrite, SnapshotLog}
 import graft.sql.GraftSql
 
-/** Spark jobs, exchanges and output files of copy-on-write statements:
-  * a rewrite that only scans files is written without a shuffle, and the
-  * MERGE's rewrite without a second one after its join.
+/** Spark jobs, SQL executions, exchanges and output files of
+  * copy-on-write statements: a rewrite that only scans files is written
+  * without a shuffle; a MERGE or upsert from driver-held rows probes its
+  * keys on the driver, and such a MERGE joins and writes in one job with
+  * no exchange; a MERGE from any other source keeps its shuffled join.
   */
 class RewriteShapeSpec extends AnyFunSuite {
 
@@ -35,14 +37,15 @@ class RewriteShapeSpec extends AnyFunSuite {
     case _ => p.children.flatMap(nodes)
   })
 
-  /** What a traced body ran: its Spark jobs; per snapshot write (the
-    * named SQL execution of `ParquetWrite`), its executed plan and the
-    * number of its jobs that ran the write tasks (the exchanges and
-    * broadcasts of the plan feeding it run jobs of their own); and how
-    * many jobs started after the last write ended.
+  /** What a traced body ran: its Spark jobs and SQL executions; per
+    * snapshot write (the named SQL execution of `ParquetWrite`), its
+    * executed plan and the number of its jobs that ran the write tasks
+    * (the exchanges and broadcasts of the plan feeding it run jobs of
+    * their own); how many jobs started after the last write ended; and
+    * how many ran outside every write's execution.
     */
-  private case class Trace(jobs: Int, writes: Seq[SparkPlan], writeJobs: Seq[Int],
-      jobsAfterWrites: Int)
+  private case class Trace(jobs: Int, execs: Int, writes: Seq[SparkPlan],
+      writeJobs: Seq[Int], jobsAfterWrites: Int, jobsOutsideWrites: Int)
 
   private def traced(body: => Any): Trace = {
     val sc = spark.sparkContext
@@ -51,6 +54,7 @@ class RewriteShapeSpec extends AnyFunSuite {
     // job of the group, Right(execution id) per ended snapshot write
     val events = new java.util.concurrent.ConcurrentLinkedQueue[Either[(Long, Boolean), Long]]()
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val execs = new java.util.concurrent.atomic.AtomicInteger()
     val jobListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
@@ -61,6 +65,8 @@ class RewriteShapeSpec extends AnyFunSuite {
               .exists(_.name.startsWith("runJob at ParquetWrite.scala")))))
         }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case start: SparkListenerSQLExecutionStart if start.jobTags.contains(group) =>
+          execs.incrementAndGet()
         case end: SparkListenerSQLExecutionEnd
             if ListenerEvents.executionName(end).contains(ParquetWrite.ExecutionName) =>
           events.add(Right(end.executionId))
@@ -75,8 +81,10 @@ class RewriteShapeSpec extends AnyFunSuite {
     sc.addSparkListener(jobListener)
     spark.listenerManager.register(planListener)
     sc.setJobGroup(group, "rewrite shape")
+    sc.addJobTag(group)
     try { body; org.apache.spark.ListenerBusDrain(sc) }
     finally {
+      sc.removeJobTag(group)
       sc.clearJobGroup()
       spark.listenerManager.unregister(planListener)
       sc.removeSparkListener(jobListener)
@@ -85,9 +93,10 @@ class RewriteShapeSpec extends AnyFunSuite {
     val evs = events.asScala.toSeq
     val writeIds = evs.collect { case Right(id) => id }
     val jobs = evs.collect { case Left(j) => j }
-    Trace(jobs.size, writes.asScala.toSeq,
+    Trace(jobs.size, execs.get, writes.asScala.toSeq,
       writeIds.map(id => jobs.count(_ == ((id, true)))),
-      evs.drop(evs.lastIndexWhere(_.isRight) + 1).size)
+      evs.drop(evs.lastIndexWhere(_.isRight) + 1).size,
+      jobs.count { case (exec, _) => !writeIds.contains(exec) })
   }
 
   /** The trace of one statement that writes once: one write plan, run by
@@ -145,7 +154,7 @@ class RewriteShapeSpec extends AnyFunSuite {
     assert(got.getLong(0) == kept.size.toLong && got.getLong(1) == want, got)
   }
 
-  test("a star MERGE with a local source runs at most four jobs") {
+  test("a star MERGE from a local source runs one job, one execution, no exchange") {
     import spark.implicits._
     val (t, (lo, _)) = fourFiles("shape-merge", "shm_v")
     Seq((lo + 5, 100L), (lo + 6, 101L), (9000L, 1L)).toDF("k", "qty")
@@ -155,18 +164,87 @@ class RewriteShapeSpec extends AnyFunSuite {
         """MERGE INTO shm_v USING shm_src ON shm_v.k = shm_src.k
           |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
     }
-    assert(merge.jobs <= 4, s"star MERGE ran ${merge.jobs} jobs")
+    // the probe runs on the driver; the join, its guards and the write
+    // run in the write's one execution and one job
+    assert(merge.jobs == 1, s"star MERGE ran ${merge.jobs} jobs")
+    assert(merge.execs == 1, s"star MERGE ran ${merge.execs} SQL executions")
     oneWrite("MERGE", merge)
-    // the join's two exchanges, and no REBALANCE above it
-    val shuffles = exchanges(merge.writes)
-    assert(shuffles.size <= 2 && !shuffles.exists {
-      case e: ShuffleExchangeExec => e.shuffleOrigin.toString.startsWith("REBALANCE")
-      case _ => false
-    }, merge.writes.head)
+    assert(exchanges(merge.writes).isEmpty, merge.writes.head)
     assert(added(t, 2L) == 1)
     val got = spark.sql("SELECT count(*), sum(qty) FROM shm_v").head
     val want = (0L until 4000L).map(k => k % 7).sum - (lo + 5) % 7 - (lo + 6) % 7 + 100 + 101 + 1
     assert(got.getLong(0) == 4001L && got.getLong(1) == want, got)
+  }
+
+  test("a MERGE from a parquet source keeps its shuffled join and the model's rows") {
+    import spark.implicits._
+    val (_, (lo, _)) = fourFiles("shape-merge-parquet", "shp2_v")
+    val src = Seq((lo + 5, 100L), (lo + 6, 101L), (9000L, 1L), (9001L, 2L))
+    val srcDir = dir("shape-merge-parquet-src")
+    src.toDF("k", "qty").write.parquet(srcDir)
+    spark.read.parquet(srcDir).createOrReplaceTempView("shp2_src")
+    val merge = traced {
+      GraftSql.dml(spark,
+        """MERGE INTO shp2_v USING shp2_src ON shp2_v.k = shp2_src.k
+          |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    }
+    oneWrite("MERGE", merge)
+    val shuffles = exchanges(merge.writes)
+    assert(shuffles.exists(_.isInstanceOf[ShuffleExchangeExec]), merge.writes.head)
+    val model = (0L until 4000L).map(k => k -> k % 7).toMap ++ src
+    val got = spark.table("shp2_v").as[(Long, Long)].collect().toSeq.sorted
+    assert(got == model.toSeq.sorted)
+  }
+
+  test("an insert-only local MERGE, no candidate file: one job, one new file") {
+    import spark.implicits._
+    val (t, _) = fourFiles("shape-merge-insert", "shmi_v")
+    Seq((9000L, 1L), (9001L, 2L), (9002L, 3L)).toDF("k", "qty")
+      .createOrReplaceTempView("shmi_src")
+    val merge = traced {
+      GraftSql.dml(spark,
+        """MERGE INTO shmi_v USING shmi_src ON shmi_v.k = shmi_src.k
+          |WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    }
+    assert(merge.jobs == 1, s"insert-only MERGE ran ${merge.jobs} jobs")
+    assert(merge.execs == 1, s"insert-only MERGE ran ${merge.execs} SQL executions")
+    oneWrite("MERGE", merge)
+    assert(exchanges(merge.writes).isEmpty, merge.writes.head)
+    val v = SnapshotLog.latestVersion(spark, t).get
+    assert(v == 2L && added(t, 2L) == 1)
+    assert(SnapshotLog.manifest(spark, t, 2L).files.size == 5)
+    val got = spark.sql("SELECT count(*), sum(qty) FROM shmi_v").head
+    assert(got.getLong(0) == 4003L &&
+      got.getLong(1) == (0L until 4000L).map(_ % 7).sum + 6L, got)
+  }
+
+  test("an upsert of driver-local rows runs no job before its write execution") {
+    import spark.implicits._
+    val (t, (lo, _)) = fourFiles("shape-upsert", "shu_v")
+    val up = traced {
+      SnapshotLog.upsert(Seq((lo + 5, 100L), (9000L, 1L)).toDF("k", "qty"), t, "k")
+    }
+    assert(up.writes.size == 1, up)
+    assert(up.execs == 1, s"upsert ran ${up.execs} SQL executions")
+    assert(up.jobsOutsideWrites == 0, s"upsert ran ${up.jobsOutsideWrites} jobs outside its write")
+    assert(up.jobsAfterWrites == 0, up)
+    val after = SnapshotLog.read(spark, t)
+    assert(after.count() == 4001L)
+    assert(after.where(col("k") === lo + 5).select("qty").head.getLong(0) == 100L)
+  }
+
+  test("an upsert of a large local batch probes it in a job, not on the driver") {
+    import spark.implicits._
+    val (t, (lo, _)) = fourFiles("shape-upsert-large", "shul_v")
+    // rows x files past the driver probe's cap
+    val n = SnapshotLog.DriverProbeCells / 4 + 1
+    val batch = ((lo + 5, 100L) +: (0L until n).map(i => (10000L + i, 1L))).toDF("k", "qty")
+    val up = traced(SnapshotLog.upsert(batch, t, "k"))
+    assert(up.writes.size == 1, up)
+    assert(up.jobsOutsideWrites >= 1, s"upsert ran ${up.jobsOutsideWrites} jobs outside its write")
+    val after = SnapshotLog.read(spark, t)
+    assert(after.count() == 4000L + n)
+    assert(after.where(col("k") === lo + 5).select("qty").head.getLong(0) == 100L)
   }
 
   test("an UPDATE across three tiny files writes one file") {
